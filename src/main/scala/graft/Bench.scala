@@ -47,6 +47,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    // parsed before the sweep: a malformed value must not throw after
+    // the sweep has run and lose its results
+    val readjN = readjCount(sys.env.get("SPARK_GRAFT_BENCH_READJ"))
     // Dev-only subset filter (comma-separated query names) for
     // isolated A/B timings — the committed BENCH_r{N} figures always
     // come from the driver's full sweep (the ScaleBench convention)
@@ -151,7 +154,6 @@ object Bench {
     // rounds); `readjudicated` gives the reader the isolated figure
     // the builder previously had to reconstruct by hand
     // (OPTIMIZATION_r11.md's protocol, mechanized).
-    val readjN = sys.env.getOrElse("SPARK_GRAFT_BENCH_READJ", "10").toInt
     val readjudicated: Seq[(String, Double, Double)] =
       if (!canaryContaminated || readjN <= 0) Seq.empty
       else results.filter(_._2 >= 0).sortBy(-_._2).take(readjN).map {
@@ -205,4 +207,16 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** How many of the slowest queries to re-time when the canary trips:
+    * the `SPARK_GRAFT_BENCH_READJ` value, or 10 when it is unset or not
+    * an integer (a malformed value is reported on stderr). */
+  private[graft] def readjCount(raw: Option[String]): Int =
+    raw.fold(10) { v =>
+      v.trim.toIntOption.getOrElse {
+        System.err.println(
+          s"[bench] SPARK_GRAFT_BENCH_READJ=$v is not an integer; using 10")
+        10
+      }
+    }
 }

@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - File-format choice keys on the ".parquet" extension, not the
   *     reference's substring-of-whole-path test (RAS:228 would route
   *     "/data/parquet/x.csv" to the parquet reader — noted bug).
-  *   - Lazy caching of metadata/diff follows RAS:77-79 via Scala lazy vals.
+  *   - Lazy caching of metadata/diff follows RAS:77-79 via Scala lazy vals;
+  *     the diff is cached as its collected rows, not as a plan.
   */
 final class RedshiftAutoSchema(
     spark: SparkSession,
@@ -134,7 +135,9 @@ final class RedshiftAutoSchema(
     DdlGenerator.tableDdl(schema, table, metadata, exportFieldName,
       exportFieldType, primaryKey, distKey, sortKey)
 
-  /** A7: ALTER TABLE ADD COLUMN per MISSING diff row (RAS:177-192). */
+  /** A7: ALTER TABLE ADD COLUMN per MISSING diff row (RAS:177-192).
+    * Filters the cached local diff frame, so it launches no Spark job
+    * once the diff has run. */
   def generateColumnDdl(): Option[String] = {
     val missing = evaluateTableDdlDiffs()
       .filter(org.apache.spark.sql.functions.col("reason") === "MISSING")
@@ -153,7 +156,10 @@ final class RedshiftAutoSchema(
     * precedence order: the caller-supplied DataFrame(field,
     * deployed_type), the JDBC catalog when `conn` is set (the
     * reference's information_schema.columns read, RAS:215-216), else
-    * the Spark catalog. Cached like RAS:79/183. */
+    * the Spark catalog. Cached like RAS:79/183: the diff runs once,
+    * its rows (at most one per column, never data-sized) are collected
+    * and served as a local frame, so later calls and actions on the
+    * result launch no Spark job. */
   def evaluateTableDdlDiffs(): DataFrame = diffCached
 
   private lazy val diffCached: DataFrame = {
@@ -164,6 +170,7 @@ final class RedshiftAutoSchema(
     val dep = deployed.orElse(conn.map(c =>
         graft.sources.JdbcCatalog.deployedFromJdbc(spark, c, schema, table)))
       .getOrElse(SchemaDiff.deployedFromCatalog(spark, schema, table))
-    SchemaDiff.diff(proposed, dep)
+    val diff = SchemaDiff.diff(proposed, dep)
+    spark.createDataFrame(diff.collectAsList(), diff.schema)
   }
 }

@@ -63,17 +63,8 @@ object Sketch {
     * this frame with max(reg) at ANY coarser grouping yields the
     * registers of the merged sketch. */
   def hllRegisters(df: DataFrame, valueCol: String,
-                   groupCols: Seq[String]): DataFrame = {
-    val h = h48(col(valueCol))
-    val rem = shiftright(h, 8) // upper 40 bits (h >= 0)
-    val rho = when(rem === 0L, lit(41))
-      .otherwise(lit(40) - floorLog2(rem))
-    df.filter(col(valueCol).isNotNull)
-      .select(groupCols.map(col) :+ (h % m).cast("int").as("bucket")
-        :+ rho.as("reg"): _*)
-      .groupBy(groupCols.map(col) :+ col("bucket"): _*)
-      .agg(max("reg").as("reg"))
-  }
+                   groupCols: Seq[String]): DataFrame =
+    registerAgg(df, valueCol, groupCols)
 
   /** [[hllRegisters]] plus a per-(group, bucket) cell count `_cells` —
     * one aggregate carries the registers AND the non-null row count
@@ -82,7 +73,14 @@ object Sketch {
     * Register columns are identical to [[hllRegisters]]'; select them
     * out before [[hllEstimate]]. */
   private[graft] def hllRegistersCounted(df: DataFrame, valueCol: String,
-                                         groupCols: Seq[String]): DataFrame = {
+                                         groupCols: Seq[String]): DataFrame =
+    registerAgg(df, valueCol, groupCols, count(lit(1)).as("_cells"))
+
+  /** The one copy of the hash/bucket/rho pipeline behind both register
+    * builders: max(rho) per (group, bucket), plus any `extra`
+    * aggregates in the same pass. */
+  private def registerAgg(df: DataFrame, valueCol: String,
+                          groupCols: Seq[String], extra: Column*): DataFrame = {
     val h = h48(col(valueCol))
     val rem = shiftright(h, 8) // upper 40 bits (h >= 0)
     val rho = when(rem === 0L, lit(41))
@@ -91,7 +89,7 @@ object Sketch {
       .select(groupCols.map(col) :+ (h % m).cast("int").as("bucket")
         :+ rho.as("reg"): _*)
       .groupBy(groupCols.map(col) :+ col("bucket"): _*)
-      .agg(max("reg").as("reg"), count(lit(1)).as("_cells"))
+      .agg(max("reg").as("reg"), extra: _*)
   }
 
   /** Estimate from a register frame grouped by `groupCols`: one row per

@@ -92,6 +92,28 @@ class RedshiftAutoSchemaSpec extends SparkSpec {
       "ALTER TABLE s.t ADD COLUMN extra bool;")
   }
 
+  test("column DDL after the diff reuses its rows: zero jobs, same ALTERs") {
+    val df = Seq((3000000000L, "a", true, 2.5)).toDF("id", "name", "extra", "more")
+    val deployed = Seq(("id", "int8"), ("name", "int4"), ("gone", "int4"))
+      .toDF("field", "deployed_type")
+    def ras() = new RedshiftAutoSchema(spark, "s", "t", fileDf = Some(df),
+      deployed = Some(deployed))
+    val fresh = ras().generateColumnDdl()
+    val t = ras()
+    val diff = t.evaluateTableDdlDiffs().collect()
+      .map(r => r.getString(0) -> r.getString(3)).toMap
+    assert(diff == Map("name" -> "TYPE MISMATCH", "extra" -> "MISSING",
+      "more" -> "MISSING", "gone" -> "DEPRECATED"))
+    val (alters, jobs) = countJobs(t.generateColumnDdl())
+    assert(jobs == 0, s"generateColumnDdl re-ran the diff: $jobs jobs")
+    assert(alters == fresh)
+    assert(alters.get.split("\n").toSet == Set(
+      "ALTER TABLE s.t ADD COLUMN extra bool;",
+      "ALTER TABLE s.t ADD COLUMN more float8;"))
+    val (again, againJobs) = countJobs(t.evaluateTableDdlDiffs().collect())
+    assert(againJobs == 0 && again.length == diff.size)
+  }
+
   test("live-reference CSV parity golden (verified against pandas run)") {
     // Expected types produced by RUNNING the actual reference library on
     // this exact file (pandas 2.x, 2026-08-12): every edge the round-1

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +19,32 @@ trait SparkSpec extends AnyFunSuite {
     if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df
+  }
+
+  /** Runs `body` and counts the Spark jobs it launched. Job-group
+    * scoped: suites share one JVM/session under sbt's parallel
+    * execution, so a global counter would absorb OTHER suites'
+    * concurrent jobs. The group id is thread-local and inherited by
+    * pools created inside `body`. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (group == j.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setJobGroup(group, "job-count probe")
+    try {
+      val r = body
+      // listener bus is async — drain before reading the counter
+      Thread.sleep(300)
+      (r, jobs.get())
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
   }
 
   /** DataFrame from (value) rows of a single string column. */

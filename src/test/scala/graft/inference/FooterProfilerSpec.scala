@@ -1,38 +1,12 @@
 package graft.inference
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Parquet-footer fast path: numeric columns decide from row-group
   * metadata with profiles IDENTICAL to the fused scan's, and an
   * all-numeric table profiles with zero Spark jobs. */
 class FooterProfilerSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs[T](body: => T): (T, Int) = {
-    // job-group-scoped: suites share one JVM/session under sbt's
-    // parallel execution, so a global counter would absorb OTHER
-    // suites' concurrent jobs. The group id is thread-local and
-    // inherited by pools created inside `body`.
-    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "job-count probe")
-    try {
-      val r = body
-      // listener bus is async — drain before reading the counter
-      Thread.sleep(300)
-      (r, jobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
-  }
 
   test("mixed table: footer-hybrid profiles == full-scan profiles") {
     val dir = s"/tmp/graft-test-footer-mixed-${System.getProperty("user.name")}"
@@ -55,6 +29,26 @@ class FooterProfilerSpec extends SparkSpec {
     assert(named("frac") == "float8" && named("whole") == "int4")
     assert(named("nand") == "float8" && named("allnull") == "notype")
     assert(named("flag_id") == "int4") // _id opt-out beats bool domain
+  }
+
+  test("all-string remainder profiles melted == full-scan profiles") {
+    val dir = s"/tmp/graft-test-footer-strrem-${System.getProperty("user.name")}"
+    val df = Seq(
+      (1L, 1.5, "abc", Option("12"), "2020-01-01 10:00:00"),
+      (2L, -0.25, "NaN", Option.empty[String], "2020-01-02"),
+      (7L, 99.75, "9223372036854775808", Option("-3"), "x")
+    ).toDF("k", "frac", "s", "num", "when")
+    df.repartition(1).write.mode("overwrite").parquet(dir)
+    val read = spark.read.parquet(dir)
+    val Some((_, perCol)) = FooterProfiler.footerProfiles(spark, dir, read.schema)
+    // the footers decide the numeric columns, so the scanned remainder
+    // is three strings: the melted path
+    assert(perCol.map(_.isDefined) == Seq(true, true, false, false, false))
+    val (rowsFast, fast) =
+      ColumnProfiler.profileParquetWithCount(spark, dir, read)
+    val (rowsScan, scan) = ColumnProfiler.profileWide(read)
+    assert(rowsFast == rowsScan)
+    assert(fast == scan)
   }
 
   test("all-numeric table: zero Spark jobs, inference unchanged") {

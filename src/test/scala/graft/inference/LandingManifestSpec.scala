@@ -1,31 +1,11 @@
 package graft.inference
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Incremental landing-zone manifest: profile round-trip, semigroup
   * equivalence with full re-profiling, and only-new-files scan cost. */
 class LandingManifestSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs[T](body: => T): (T, Int) = {
-    // job-group-scoped (see FooterProfilerSpec): suites share one JVM,
-    // a global counter would absorb other suites' concurrent jobs
-    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "job-count probe")
-    try { val r = body; Thread.sleep(300); (r, jobs.get()) }
-    finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
-  }
 
   test("manifest round-trips profiles exactly") {
     val df = Seq(

@@ -508,7 +508,7 @@ class StreamingOpsSpec extends SparkSpec {
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination(60000)
+    try q.awaitTermination(60000) finally q.stop()
     val got = spark.table("attrib_test")
       .select("purchase_id", "click_id").as[(Long, Long)].collect().toSet
     assert(got == Set((200L, 100L), (200L, 101L), (201L, 103L)))
@@ -539,7 +539,7 @@ class StreamingOpsSpec extends SparkSpec {
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination(60000)
+    try q.awaitTermination(60000) finally q.stop()
     val closed = spark.table("sessions_test")
       .select("user_id", "session_start", "session_end", "n_events")
       .as[(Long, Timestamp, Timestamp, Int)].collect().toSet
@@ -578,7 +578,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      try q.awaitTermination(60000) finally q.stop()
     }
     mem.addData(
       StreamingOps.Event(1L, ts("2024-01-01 00:10:00"), "a"),
@@ -621,7 +621,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      try q.awaitTermination(60000) finally q.stop()
     }
     val all = scala.collection.mutable.ArrayBuffer[StreamingOps.Event]()
     def add(evs: StreamingOps.Event*): Unit = { all ++= evs; mem.addData(evs: _*) }
@@ -684,7 +684,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      try q.awaitTermination(60000) finally q.stop()
     }
     // run 1: open a session; watermark after = 10:10 − 10m = 10:00
     mem.addData(StreamingOps.Event(1L, ts("2024-01-01 10:00:00"), "a"),
@@ -730,7 +730,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      try q.awaitTermination(60000) finally q.stop()
     }
     mem.addData(StreamingOps.Event(1L, ts("2024-01-01 10:00:00"), "a"),
       StreamingOps.Event(1L, ts("2024-01-01 10:10:00"), "b"))
