@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import GraftSession.noopSeconds
 
 /** Benchmark main — one JSON line with per-query wall seconds.
   *
-  * Each query materializes fully through the `noop` sink (count() would
-  * let Catalyst prune most of the work and under-report). Each query
-  * runs 3× and reports the MEDIAN: this box's run-to-run spread is
-  * ±15–20% and a single GC pause under single-shot timing fabricated a
-  * phantom 16× regression in round 5 (q66 6.98 s recorded vs 0.68 s on
-  * rerun). Reps are INTERLEAVED round-robin (rep 1 of every query, then
-  * rep 2, then rep 3) rather than back-to-back per query: a sustained
+  * Each query materializes fully through the `noop` sink
+  * ([[GraftSession.noopSeconds]]). Each query runs 3× and reports the
+  * MEDIAN: this box's run-to-run spread is ±15–20% and a single GC
+  * pause under single-shot timing fabricated a phantom 16× regression
+  * in round 5 (q66 6.98 s recorded vs 0.68 s on rerun). Reps are
+  * INTERLEAVED round-robin (rep 1 of every query, then rep 2, then
+  * rep 3) rather than back-to-back per query: a sustained
   * slow window (GC storm / external box load spanning ~10 s) that lands
   * on one query's three consecutive reps poisons all of them and the
   * median absorbs nothing — round 6 recorded 4–6× phantom regressions
@@ -21,30 +21,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // localCheckpoint blocks (the iterative-graph queries pin one
-      // V-row frame per superstep) are reclaimed by ContextCleaner
-      // only after a DRIVER GC collects the RDD handle — and a 128 GiB
-      // heap under a 15-minute bench may never GC on its own
-      // (default periodicGC.interval is 30 min), so hundreds of dead
-      // checkpoint frames accumulate in executor storage and drag
-      // every later query uniformly. One-minute periodic GC keeps the
-      // run steady-state.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // 173 queries × several codegen stages ≈ 700+ generated classes
-      // per sweep against a 100-entry default cache: every rep
-      // re-compiles nearly every stage (janino compilation is
-      // 50-200 ms a stage — a uniform tax on every small query).
-      // Static conf: must be set before the first session.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // parsed before the sweep: a malformed value must not throw after
@@ -60,10 +38,8 @@ object Bench {
     // Untimed warmup at the smallest SF: pays JVM/classloading/codegen
     // cost once so the timed loop measures steady-state execution (the
     // first timed query otherwise absorbs several seconds of warmup).
-    queryList.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    queryList.foreach { case (name, fn) =>
+      noopSeconds(name)(fn(spark, "/root/testdata/sf0.001"))
     }
     val timesByQuery = queryList.map { case (name, _) =>
       name -> scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -81,24 +57,10 @@ object Bench {
       // nudge the cleaner at each sweep boundary so rep N+1 starts
       // from the same storage state rep 1 did
       if (idx == 0 && rep > 1) System.gc()
-      if (idx == midIdx && SparkEntry.queries.contains(midCanaryName)) {
-        val m0 = System.nanoTime()
-        val mok =
-          try { SparkEntry.queries(midCanaryName)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        midProbes += (if (mok) (System.nanoTime() - m0) / 1e9 else -1.0)
-      }
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      // a failed query must not report its (tiny) elapsed time as a
-      // valid figure — -1 marks it in the JSON instead of flattering it
-      timesByQuery(name) += (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      if (idx == midIdx && SparkEntry.queries.contains(midCanaryName))
+        midProbes += noopSeconds(midCanaryName)(
+          SparkEntry.queries(midCanaryName)(spark, sfDir))
+      timesByQuery(name) += noopSeconds(name)(fn(spark, sfDir))
     }
     val results = queryList.map { case (name, _) =>
       val times = timesByQuery(name).toSeq
@@ -122,12 +84,7 @@ object Bench {
     val canaryNames = Seq("q01_profile_lineitem", "q88_scd2_collapse",
       "q89_interval_overlap").filter(SparkEntry.queries.contains)
     val canary = canaryNames.map { n =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      val rerun = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val rerun = noopSeconds(n)(SparkEntry.queries(n)(spark, sfDir))
       val sweep = results.toMap.getOrElse(n, -1.0)
       (n, sweep, rerun)
     }
@@ -159,12 +116,7 @@ object Bench {
       else results.filter(_._2 >= 0).sortBy(-_._2).take(readjN).map {
         case (name, sweepMedian) =>
           val ts = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            val ok =
-              try { SparkEntry.queries(name)(spark, sfDir)
-                .write.format("noop").mode("overwrite").save(); true }
-              catch { case _: Throwable => false }
-            if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+            noopSeconds(name)(SparkEntry.queries(name)(spark, sfDir))
           }
           val med = if (ts.exists(_ < 0)) -1.0
                     else ts.sorted.apply(ts.size / 2)
@@ -189,7 +141,7 @@ object Bench {
     // explicitly asks for the full map here (~12 KB at 323 queries);
     // the durable copies below stay for history.
     val json =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries_omitted":0,"failed":[${failed.mkString(",")}],"mean_sec":${r3(if (okResults.nonEmpty) total / okResults.size else -1.0)},"p50_sec":${r3(p50)},"queries":$qs,"canary":$canaryJson,"canary_mid":$canaryMidJson,"canary_contaminated":$canaryContaminated,"readjudicated":$readjJson,"full":"BENCH_FULL.json"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","parallelism":${spark.sparkContext.defaultParallelism},"n_queries":${results.size},"queries_omitted":0,"failed":[${failed.mkString(",")}],"mean_sec":${r3(if (okResults.nonEmpty) total / okResults.size else -1.0)},"p50_sec":${r3(p50)},"queries":$qs,"canary":$canaryJson,"canary_mid":$canaryMidJson,"canary_contaminated":$canaryContaminated,"readjudicated":$readjJson,"full":"BENCH_FULL.json"}"""
     println(json)
     // BENCH_FULL.json used to be clobbered by whichever same-session
     // run happened last (the r11 8-core sweep overwrote the 32-core

@@ -389,26 +389,7 @@ object ScaleBench {
       .agg(count(lit(1)).as("n_pairs"), sum("hamming").as("sum_hamming"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the Bench lesson: localCheckpoint blocks from the iterative
-      // queries accumulate until a DRIVER GC runs, and a big idle heap
-      // never GCs inside one session — dragging later queries (q55 at
-      // sf1 measured 4.5x slower purely from running late in the sweep:
-      // 92.0 s -> 20.7 s A/B on identical code)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // the second Bench lesson: the default 100-entry codegen cache
-      // thrashes under a many-query sweep and re-compiles nearly
-      // every stage per rep (janino 50-200 ms/stage — Bench total
-      // 208 -> 136 s from this line alone)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf1 = "target/sf1"
@@ -420,9 +401,8 @@ object ScaleBench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // untimed warmup (same rationale as Bench: JVM/codegen cost once)
     heavy.filter(n => only.forall(_.contains(n))).foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      GraftSession.noopSeconds(n)(
+        SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
     }
     // pre-compute the q198 store-growth signature stores (untimed —
     // the production store is persisted, never re-derived per batch);
@@ -454,16 +434,8 @@ object ScaleBench {
         ("q55_simhash_count_b" -> (q55CountLeg _)))
     val legs = allLegs.filter { case (n, _) => only.forall(_.contains(n)) }
     def time(dir: String): Seq[(String, Double)] = legs.map { case (n, fn) =>
-      System.gc() // steady storage state per query (see builder note)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, dir)
-          .write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[scalebench] $n failed at $dir: ${e.getMessage}")
-          false
-        }
-      (n, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      System.gc() // steady storage state per query (GraftSession.confs)
+      (n, GraftSession.noopSeconds(s"$n at $dir")(fn(spark, dir)))
     }
     val base = time(src)
     val scaled = time(sf1)

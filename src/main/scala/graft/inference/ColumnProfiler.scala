@@ -353,18 +353,16 @@ object ColumnProfiler {
     *
     * A frame of two or more columns, all strings, is melted by
     * [[profileMelted]]: the string views and aggregates exist once,
-    * whatever the column count, so `maxColsPerJob` does not apply to
-    * it. Such frames are the facade's delimited and JSON loads, the
-    * string remainder [[profileParquetWithCount]] scans once the
-    * footers decide the numeric columns, and all-string streaming
-    * micro-batches. Any other frame runs [[profileWide]] in
-    * `max(1, ceil(cols/maxColsPerJob))` jobs (default: one job for ≤256
-    * columns). Either way the aggregate is associative+commutative →
-    * map-side partial aggregation, no shuffle of raw rows; only stats
-    * rows reach the driver.
+    * whatever the column count, so it runs in one job at any width.
+    * Such frames are the facade's delimited and JSON loads, the string
+    * remainder [[profileParquetWithCount]] scans once the footers decide
+    * the numeric columns, and all-string streaming micro-batches. Any
+    * other frame runs [[profileWide]] in `ceil(cols / 256)` jobs.
+    * Either way the aggregate is associative+commutative → map-side
+    * partial aggregation, no shuffle of raw rows; only stats rows reach
+    * the driver.
     */
-  def profile(df: DataFrame, maxColsPerJob: Int = 256): Seq[ColumnProfile] =
-    profileWithCount(df, maxColsPerJob)._2
+  def profile(df: DataFrame): Seq[ColumnProfile] = profileWithCount(df)._2
 
   /** Deterministic SAMPLED profiling: profile only the md5 slice
     * `hashBucket(idCol) < pct` (graft.operators.Curation.hashBucket —
@@ -380,13 +378,11 @@ object ColumnProfiler {
     * all-'NaN' float8 are DEFAULTS (no evidence), not lattice points.
     * Use for cheap first-pass schema proposals over huge landing
     * tables; confirm with a full profile before locking a DDL. */
-  def profileSampledWithCount(df: DataFrame, idCol: String, pct: Int,
-                              maxColsPerJob: Int = 256)
+  def profileSampledWithCount(df: DataFrame, idCol: String, pct: Int)
       : (Long, Seq[ColumnProfile]) = {
     require(pct >= 1 && pct <= 100, s"pct must be in [1, 100]: $pct")
     profileWithCount(
-      df.filter(graft.operators.Curation.hashBucket(col(quote(idCol))) < pct),
-      maxColsPerJob)
+      df.filter(graft.operators.Curation.hashBucket(col(quote(idCol))) < pct))
   }
 
   /** [[profileWithCount]] with the parquet-footer fast path: numeric
@@ -401,8 +397,7 @@ object ColumnProfiler {
     * columns, 1.9× at 50k × 30). Falls back to the full scan whenever
     * footers can't speak for the table. */
   def profileParquetWithCount(spark: org.apache.spark.sql.SparkSession,
-                              path: String, df: DataFrame,
-                              maxColsPerJob: Int = 256)
+                              path: String, df: DataFrame)
       : (Long, Seq[ColumnProfile]) =
     FooterProfiler.footerProfiles(spark, path, df.schema) match {
       case Some((rows, perCol)) if rows > 0L && perCol.exists(_.isDefined) =>
@@ -410,28 +405,30 @@ object ColumnProfiler {
         val undecided = fields.zip(perCol).collect { case (f, None) => f.name }
         val scanned: Map[String, ColumnProfile] =
           if (undecided.isEmpty) Map.empty
-          else profile(df.select(undecided.map(n => col(quote(n))): _*),
-            maxColsPerJob).map(p => p.field -> p).toMap
+          else profile(df.select(undecided.map(n => col(quote(n))): _*))
+            .map(p => p.field -> p).toMap
         (rows, fields.zip(perCol).map {
           case (_, Some(p)) => p
           case (f, None)    => scanned(f.name)
         })
-      case _ => profileWithCount(df, maxColsPerJob)
+      case _ => profileWithCount(df)
     }
 
   /** Like [[profile]] but also returns the exact row count, folded into
     * the same single pass (reference: empty file → metadata None,
     * RedshiftAutoSchema.py:243-245 — we detect it with no extra job). */
-  def profileWithCount(df: DataFrame, maxColsPerJob: Int = 256)
-      : (Long, Seq[ColumnProfile]) = {
+  def profileWithCount(df: DataFrame): (Long, Seq[ColumnProfile]) = {
     val fields = df.schema.fields.toSeq
     if (fields.isEmpty) (0L, Seq.empty)
     // one column has no expression set to share: melting it only adds
     // the generator and a keyed shuffle (measured 14–38 % slower)
     else if (fields.size > 1 && fields.forall(f => kindOf(f.dataType) == StrKind))
       profileMelted(df)
-    else profileWide(df, maxColsPerJob)
+    else profileWide(df)
   }
+
+  /** Columns per [[profileWide]] job: one job up to 256 columns. */
+  private val maxColsPerJob = 256
 
   /** One wide aggregate per chunk of `maxColsPerJob` columns: views and
     * aggregates repeat per column, `p{i}_*` for the i-th column of the
@@ -443,12 +440,12 @@ object ColumnProfiler {
     * whole-stage codegen (interpreted `TungstenAggregationIterator`),
     * so the per-column expression set costs both planning and
     * execution time as the width grows. */
-  private[inference] def profileWide(df: DataFrame, maxColsPerJob: Int = 256)
+  private[inference] def profileWide(df: DataFrame)
       : (Long, Seq[ColumnProfile]) = {
     val fields = df.schema.fields.toSeq
     if (fields.isEmpty) return (0L, Seq.empty)
     var rows = -1L
-    val profiles = fields.grouped(math.max(1, maxColsPerJob)).toSeq.flatMap { chunk =>
+    val profiles = fields.grouped(maxColsPerJob).toSeq.flatMap { chunk =>
       val views = chunk.zipWithIndex.flatMap { case (f, i) =>
         viewsFor(i, f.name, f.dataType)
       }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,30 +20,11 @@ trait SparkSpec extends AnyFunSuite {
     else df
   }
 
-  /** Runs `body` and counts the Spark jobs it launched. Job-group
-    * scoped: suites share one JVM/session under sbt's parallel
-    * execution, so a global counter would absorb OTHER suites'
-    * concurrent jobs. The group id is thread-local and inherited by
-    * pools created inside `body`. */
+  /** Runs `body` and counts the Spark jobs it launched
+    * ([[GraftSession.countJobs]]: job-group scoped, bus drained). */
   def countJobs[T](body: => T): (T, Int) = {
-    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "job-count probe")
-    try {
-      val r = body
-      // listener bus is async — drain before reading the counter
-      Thread.sleep(300)
-      (r, jobs.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (r, c) = GraftSession.countJobs(spark)(body)
+    (r, c.jobs)
   }
 
   /** DataFrame from (value) rows of a single string column. */
@@ -56,18 +36,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata timestamps are NTZ-annotated micros
-      // (isAdjustedToUTC=false); read them as session-tz (UTC)
-      // TIMESTAMP so unix_micros & friends resolve, matching DuckDB's
-      // naive-timestamp comparison semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-test-wh-${System.getProperty("user.name")}")
       .getOrCreate()

@@ -260,40 +260,13 @@ class CurationSpec extends SparkSpec {
     // plus one AQE-staged pair) and the fused subtotal collect is one
     // AQE pair (2) → 5; the old dedicated guard scan added 2 more, so
     // a bound of 5 catches any reintroduced extra pass.
-    // suites share one SparkContext and may run concurrently, so a raw
-    // job counter would tally OTHER suites' jobs and false-fail; tag
-    // this operator's jobs with a job group (inherited by jobs
-    // submitted from this thread) and count only those
-    val group = s"curation-pass-count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (js.properties != null &&
-          group == js.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet()
-        }
-        ()
-      }
-    }
     val df = spark.range(5000).toDF("id")
       .withColumn("score", ($"id" % 97).cast("double"))
       .withColumn("tok", ($"id" % 5 + 1).cast("long"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "pass-count canary")
-      Curation.selectUnderBudget(df, "id", "score", "tok", 1000L)
-      // listener events post asynchronously; give the bus time to
-      // drain (an undercount only weakens this canary — it can pass
-      // trivially, never false-fail — so a generous sleep suffices;
-      // the bus API itself is private[spark])
-      Thread.sleep(3000)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() <= 5,
-      s"operator construction should need ≤5 jobs (2 passes), ran ${jobs.get()}")
+    val (_, jobs) =
+      countJobs(Curation.selectUnderBudget(df, "id", "score", "tok", 1000L))
+    assert(jobs <= 5,
+      s"operator construction should need ≤5 jobs (2 passes), ran $jobs")
   }
 
   test("chunkDocuments: stride/overlap arithmetic, tails, empty docs") {

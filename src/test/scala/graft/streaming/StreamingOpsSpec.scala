@@ -3,12 +3,39 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import java.sql.Timestamp
 
 class StreamingOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Waits for a query started with an ending trigger and fails loudly:
+    * it must terminate within `timeoutMs`, a query that died rethrows its
+    * cause with its last progress, and it is stopped either way, so no
+    * query keeps running into later tests. */
+  private def runToEnd(q: StreamingQuery, timeoutMs: Long): Unit =
+    try {
+      val ended =
+        try q.awaitTermination(timeoutMs)
+        catch { case _: StreamingQueryException => true }
+      q.exception.foreach { e =>
+        throw new AssertionError(
+          s"query ${q.name} failed; last progress: ${q.lastProgress}", e)
+      }
+      assert(ended, s"query ${q.name} still running after $timeoutMs ms; " +
+        s"last progress: ${q.lastProgress}")
+    } finally q.stop()
+
+  // `sessionize` runs under ProcessingTimeTimeout, where every trigger
+  // plans a timeout-check batch: an AvailableNow query over it never
+  // terminates, and processAllAvailable() never returns either (99
+  // empty batches in 90 s). Trigger.Once runs the one batch that holds
+  // the available rows and ends; no 30-minute processing-time gap can
+  // time out within it.
+  @annotation.nowarn("cat=deprecation")
+  private val oneBatch = Trigger.Once()
 
   test("merge across an all-'NaN' batch equals direct profiling") {
     // 'NaN' strings are numeric-castable but contribute nothing to the
@@ -72,7 +99,7 @@ class StreamingOpsSpec extends SparkSpec {
     mem.addData((7L, "a"), (8L, "b"))
     val (inc, q) = StreamingOps.schemaDriftMonitorStream(
       mem.toDF().toDF("k", "s"), ckpt)(evs => evs.foreach(events.add))
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     assert(events.isEmpty, "first batch cannot drift")
     assert(inc.currentSchema.map(_.proposedName).toList
       == List("int4", "varchar(256)"))
@@ -84,7 +111,7 @@ class StreamingOpsSpec extends SparkSpec {
     val (inc, q) = StreamingOps.inferStream(
       mem.toDF().toDF("c"),
       s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     assert(inc.currentSchema.head.proposedName == "int8")
   }
 
@@ -101,9 +128,9 @@ class StreamingOpsSpec extends SparkSpec {
       mem.toDF().toDF("id", "v", "part"), Seq("part"), Seq("id", "v"))
     val q = agg.writeStream.format("memory").queryName("fp_stream")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val streamed = spark.table("fp_stream")
       .as[(String, Long, Long)].collect().toSet
     val batch = graft.operators.Audit.tableFingerprint(
@@ -125,9 +152,9 @@ class StreamingOpsSpec extends SparkSpec {
     // closure, so the aggregation itself is assertable deterministically
     val q = agg.writeStream.format("memory").queryName("hourly_test")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val rows = spark.table("hourly_test")
       .select("hour", "event_type", "n", "sum_value")
       .as[(Timestamp, String, Long, Double)].collect().toSet
@@ -153,9 +180,9 @@ class StreamingOpsSpec extends SparkSpec {
     // eviction is pinned by the suite's state-eviction tests
     val q = agg.writeStream.format("memory").queryName("ohlc_stream")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val got = spark.table("ohlc_stream")
       .as[(Long, Timestamp, Double, Double, Double, Double, Long, Double)]
       .collect().toSet
@@ -179,9 +206,9 @@ class StreamingOpsSpec extends SparkSpec {
       mem.toDF().toDF("ts", "event_type", "value"))
     val q = agg.writeStream.format("memory").queryName("hopping_test")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val got = spark.table("hopping_test")
       .select("w_start", "event_type", "n", "sum_value")
       .as[(Timestamp, String, Long, Double)].collect().toSet
@@ -224,9 +251,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
     }
     // run 1: two on-time clicks; watermark after = 00:40 − 10m = 00:30
     mem.addData((ts("2024-01-01 00:10:00"), "click", 1.0),
@@ -270,9 +297,9 @@ class StreamingOpsSpec extends SparkSpec {
       .outputMode("append")
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val ids = spark.table("dedup_test")
       .select("event_id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(1L, 2L, 3L), "one survivor per event_id")
@@ -292,9 +319,9 @@ class StreamingOpsSpec extends SparkSpec {
       .outputMode("append")
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val ids = spark.table("fpdedup_test")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(1L, 4L),
@@ -322,9 +349,9 @@ class StreamingOpsSpec extends SparkSpec {
       .outputMode("append")
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val ids = spark.table("fpnull_test")
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(1L, 2L, 3L, 5L),
@@ -420,7 +447,7 @@ class StreamingOpsSpec extends SparkSpec {
       s"/tmp/graft-stream-ckpt-${System.nanoTime()}") { clean: DataFrame =>
       got.synchronized { got ++= clean.select("doc_id").as[Long].collect() }
     }
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val batchWant = graft.operators.Curation.decontaminate(
       corpusRows.toDF("doc_id", "text"), bench, "doc_id", "text", n = 5)
       .select("doc_id").as[Long].collect().sorted.toSeq
@@ -442,7 +469,7 @@ class StreamingOpsSpec extends SparkSpec {
           .collect().toSeq
       }
     }
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     // identical distribution → psi 0 on every spine bin, exactly the
     // batch operator's answer on the same frames
     assert(reports.nonEmpty)
@@ -467,7 +494,7 @@ class StreamingOpsSpec extends SparkSpec {
       mem.toDF().toDF("doc_id", "text"), "doc_id", "text")
     val q = streamed.writeStream.format("memory")
       .queryName("gopher_stream").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
+    try q.processAllAvailable() finally q.stop()
     val got = spark.table("gopher_stream").orderBy("doc_id").collect().toSeq
     val want = graft.operators.TextAnalysis.gopherQualityFlags(
       docs.toDF("doc_id", "text"), "doc_id", "text")
@@ -480,7 +507,7 @@ class StreamingOpsSpec extends SparkSpec {
       mem2.toDF().toDF("doc_id", "text"), "doc_id", "text")
     val q2 = streamed2.writeStream.format("memory")
       .queryName("c4_stream").outputMode("append").start()
-    q2.processAllAvailable(); q2.stop()
+    try q2.processAllAvailable() finally q2.stop()
     val got2 = spark.table("c4_stream").orderBy("doc_id").collect().toSeq
     val want2 = graft.operators.TextAnalysis.c4LineFilter(
       docs.toDF("doc_id", "text"), "doc_id", "text")
@@ -506,9 +533,9 @@ class StreamingOpsSpec extends SparkSpec {
       .outputMode("append")
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    try q.awaitTermination(60000) finally q.stop()
+    runToEnd(q, 60000)
     val got = spark.table("attrib_test")
       .select("purchase_id", "click_id").as[(Long, Long)].collect().toSet
     assert(got == Set((200L, 100L), (200L, 101L), (201L, 103L)))
@@ -537,9 +564,9 @@ class StreamingOpsSpec extends SparkSpec {
       .outputMode("append")
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(oneBatch)
       .start()
-    try q.awaitTermination(60000) finally q.stop()
+    runToEnd(q, 60000)
     val closed = spark.table("sessions_test")
       .select("user_id", "session_start", "session_end", "n_events")
       .as[(Long, Timestamp, Timestamp, Int)].collect().toSet
@@ -554,13 +581,11 @@ class StreamingOpsSpec extends SparkSpec {
     // Rows are sorted only WITHIN a micro-batch; a late event arriving in
     // a LATER batch with t < state.last (round-2 ADVICE) must extend the
     // session bounds via min/max, not regress session_end below
-    // session_start. Two AvailableNow runs over ONE checkpoint force the
+    // session_start. Two single-batch runs over ONE checkpoint force the
     // deterministic batch boundary (flatMapGroupsWithState state is
     // checkpointed, so run 2 resumes run 1's session state). The sink is
-    // foreachBatch — the memory sink refuses checkpoint recovery, and
-    // processAllAvailable() on a single continuous query never returns
-    // under ProcessingTimeTimeout (the engine schedules timeout-check
-    // batches forever, so `noNewData` never latches).
+    // foreachBatch — the memory sink refuses checkpoint recovery, and a
+    // single continuous query cannot be drained (see `oneBatch`).
     val mem = MemoryStream[StreamingOps.Event](spark)
     val ckpt = s"/tmp/graft-stream-ckpt-${System.nanoTime()}"
     val out = new java.util.concurrent.ConcurrentLinkedQueue[
@@ -576,9 +601,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(oneBatch)
         .start()
-      try q.awaitTermination(60000) finally q.stop()
+      runToEnd(q, 60000)
     }
     mem.addData(
       StreamingOps.Event(1L, ts("2024-01-01 00:10:00"), "a"),
@@ -619,9 +644,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination(60000) finally q.stop()
+      runToEnd(q, 60000)
     }
     val all = scala.collection.mutable.ArrayBuffer[StreamingOps.Event]()
     def add(evs: StreamingOps.Event*): Unit = { all ++= evs; mem.addData(evs: _*) }
@@ -682,9 +707,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination(60000) finally q.stop()
+      runToEnd(q, 60000)
     }
     // run 1: open a session; watermark after = 10:10 − 10m = 10:00
     mem.addData(StreamingOps.Event(1L, ts("2024-01-01 10:00:00"), "a"),
@@ -728,9 +753,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(oneBatch)
         .start()
-      try q.awaitTermination(60000) finally q.stop()
+      runToEnd(q, 60000)
     }
     mem.addData(StreamingOps.Event(1L, ts("2024-01-01 10:00:00"), "a"),
       StreamingOps.Event(1L, ts("2024-01-01 10:10:00"), "b"))
@@ -764,9 +789,10 @@ class StreamingOpsSpec extends SparkSpec {
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
       .start()
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(b1: _*); q.processAllAvailable()
+      mem.addData(b2: _*); q.processAllAvailable()
+    } finally q.stop()
     val got = spark.table("scd2_stream")
       .select("user_id", "state", "valid_from", "valid_to", "n_events")
       .as[(Long, String, Timestamp, Timestamp, Int)].collect().toSet
@@ -793,22 +819,23 @@ class StreamingOpsSpec extends SparkSpec {
       .option("checkpointLocation",
         s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
       .start()
-    mem.addData(
-      StreamingOps.Event(1L, ts("2024-01-01 02:00:00"), "A"),
-      StreamingOps.Event(1L, ts("2024-01-01 03:00:00"), "A"))
-    q.processAllAvailable()
-    // late, within-watermark, DIFFERENT state, behind the open run:
-    // emitted as its own closed singleton, open A run untouched
-    mem.addData(StreamingOps.Event(1L, ts("2024-01-01 00:30:00"), "Q"))
-    q.processAllAvailable()
-    // late SAME state: merges into the open run (extends start), no emit
-    mem.addData(StreamingOps.Event(1L, ts("2024-01-01 01:30:00"), "A"))
-    q.processAllAvailable()
-    // a new state closes the open run: valid_from must reflect the
-    // merged 01:30 start and n the merged count
-    mem.addData(StreamingOps.Event(1L, ts("2024-01-01 06:00:00"), "B"))
-    q.processAllAvailable()
-    q.stop()
+    try {
+      mem.addData(
+        StreamingOps.Event(1L, ts("2024-01-01 02:00:00"), "A"),
+        StreamingOps.Event(1L, ts("2024-01-01 03:00:00"), "A"))
+      q.processAllAvailable()
+      // late, within-watermark, DIFFERENT state, behind the open run:
+      // emitted as its own closed singleton, open A run untouched
+      mem.addData(StreamingOps.Event(1L, ts("2024-01-01 00:30:00"), "Q"))
+      q.processAllAvailable()
+      // late SAME state: merges into the open run (extends start), no emit
+      mem.addData(StreamingOps.Event(1L, ts("2024-01-01 01:30:00"), "A"))
+      q.processAllAvailable()
+      // a new state closes the open run: valid_from must reflect the
+      // merged 01:30 start and n the merged count
+      mem.addData(StreamingOps.Event(1L, ts("2024-01-01 06:00:00"), "B"))
+      q.processAllAvailable()
+    } finally q.stop()
     val got = spark.table("scd2_late")
       .select("user_id", "state", "valid_from", "valid_to", "n_events")
       .as[(Long, String, Timestamp, Timestamp, Int)].collect().toSet
@@ -828,9 +855,9 @@ class StreamingOpsSpec extends SparkSpec {
       mem.toDF().toDF("ts", "text"), "ts", "text", minCount = 2)
     val q = agg.writeStream.format("memory").queryName("trend_stream")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val got = spark.table("trend_stream")
       .as[(Timestamp, String, Long)].collect().toSet
     // hour 10: spark ×3 survives the minCount=2 cut; everything else
@@ -897,9 +924,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
     }
     // run 1: hour-10 window opens; watermark after = 10:40 − 30m = 10:10
     mem.addData(
@@ -946,9 +973,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
     }
     def qd(g: String, id: Long, t: String) =
       StreamingOps.QuotaDoc(g, id, ts(t))
@@ -997,19 +1024,19 @@ class StreamingOpsSpec extends SparkSpec {
     mem.addData(b1: _*)
     val q1 = mem.toDF().toDF("text", "source", "lang").writeStream
       .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         card.update(df)
       }.start()
-    q1.awaitTermination(60000)
+    runToEnd(q1, 60000)
     mem.addData(b2: _*)
     val q2 = mem.toDF().toDF("text", "source", "lang").writeStream
       .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         card.update(df)
       }.start()
-    q2.awaitTermination(60000)
+    runToEnd(q2, 60000)
     val got = card.current
     // batch twin over the union
     val union = (b1 ++ b2).toDF("text", "source", "lang")
@@ -1041,7 +1068,7 @@ class StreamingOpsSpec extends SparkSpec {
     val (inc, q) = StreamingOps.corpusCardStream(
       mem.toDF().toDF("text", "source", "lang"),
       s"/tmp/graft-stream-ckpt-${System.nanoTime()}")
-    q.awaitTermination(60000)
+    runToEnd(q, 60000)
     val got = inc.current
     assert(got.nDocs === 2L)
     assert(got.totalTokens === 3L)
@@ -1062,15 +1089,15 @@ class StreamingOpsSpec extends SparkSpec {
     // the second AvailableNow run (driver state, the card pattern)
     val (inc, q1) = StreamingOps.rollupStream(
       mem.toDF().toDF("k", "v"), Seq("k"), "v", ckpt)
-    q1.awaitTermination(60000)
+    runToEnd(q1, 60000)
     mem.addData(b2: _*)
     val q2 = mem.toDF().toDF("k", "v").writeStream
       .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         inc.update(df)
       }.start()
-    q2.awaitTermination(60000)
+    runToEnd(q2, 60000)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("k").collect().map(_.toSeq.map {
         case d: java.math.BigDecimal => d.toBigInteger
@@ -1119,7 +1146,7 @@ class StreamingOpsSpec extends SparkSpec {
         state, ckpt) { rep =>
         reports ++= rep.as[(Long, Long, Long, Long, Long)].collect()
       }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
     }
     mem.addData(batch1: _*)
     run()
@@ -1163,7 +1190,7 @@ class StreamingOpsSpec extends SparkSpec {
         state, ckpt) { rep =>
         out ++= rep.as[(Long, Long, Long, Long, Long)].collect()
       }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
       out.sortBy(_._1).toList
     }
     val first = runOnce(s"/tmp/graft-cdc-replay-ckpt-$key-a")
@@ -1204,7 +1231,7 @@ class StreamingOpsSpec extends SparkSpec {
         state, ckpt, minShared = 1) { rep =>
         out ++= rep.as[(Long, Long, Long, Option[Long], Long, Boolean)]
           .collect() }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
       out.sortBy(_._1).toList
     }
     val ckptA = s"/tmp/graft-winnow-stream-ckpt-$key-a"
@@ -1272,7 +1299,7 @@ class StreamingOpsSpec extends SparkSpec {
         out ++= rep
           .as[(Long, Long, Option[Long], Option[Double], Boolean)]
           .collect() }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
       out.sortBy(_._1).toList
     }
     val ckptA = s"/tmp/graft-embed-stream-ckpt-$key-a"
@@ -1351,7 +1378,7 @@ class StreamingOpsSpec extends SparkSpec {
         out ++= rep.as[(String, Long, Timestamp, Long, Long, Long,
           Boolean, Boolean)].collect()
       }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
     }
     mem.addData(batch1: _*)
     run()
@@ -1386,7 +1413,7 @@ class StreamingOpsSpec extends SparkSpec {
         out ++= rep.select("g", "id", "s_hi_micro", "s_lo_micro")
           .as[(String, Long, Long, Long)].collect()
       }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
       out.sortBy(_._2).toList
     }
     val first = runOnce(s"/tmp/graft-cusum-replay-ckpt-$key-a")
@@ -1420,7 +1447,7 @@ class StreamingOpsSpec extends SparkSpec {
         state, ckpt) { rep =>
         out ++= rep.as[(Long, Long, Long, Long, Long, Boolean)]
           .collect() }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
       out.sortBy(_._1).toList
     }
     val ckptA = s"/tmp/graft-span-stream-ckpt-$key-a"
@@ -1495,9 +1522,9 @@ class StreamingOpsSpec extends SparkSpec {
         }
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
     }
     mem.addData(events(0), events(4), events(5))
     runBatch()
@@ -1527,7 +1554,7 @@ class StreamingOpsSpec extends SparkSpec {
           out ++= rep.select("media_id", "n_matches", "is_dup")
             .as[(Long, Long, Boolean)].collect()
       }
-      q.awaitTermination(60000)
+      runToEnd(q, 60000)
       out.sortBy(_._1).toList
     }
     def thumbsFromStream(mem: MemoryStream[(Long, String)]) =
@@ -1581,9 +1608,9 @@ class StreamingOpsSpec extends SparkSpec {
     val q = cells.writeStream.format("memory")
       .queryName("seasonal_cells_test")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(30000)
+    runToEnd(q, 30000)
     val streamed = spark.table("seasonal_cells_test")
       .as[(String, Int, Int, Long)].collect().toSet
     val batch = graft.operators.TemporalJoins.seasonalProfile(
