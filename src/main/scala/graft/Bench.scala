@@ -35,6 +35,8 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queryList = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    val canaryNames = canaries(queryList.map(_._1))
+    val paths = resultPaths(subset = only.nonEmpty, cpus)
     // Untimed warmup at the smallest SF: pays JVM/classloading/codegen
     // cost once so the timed loop measures steady-state execution (the
     // first timed query otherwise absorbs several seconds of warmup).
@@ -50,16 +52,16 @@ object Bench {
     // still reads as a per-query regression (the round-8 q167/q168
     // ambiguity). One cheap probe at the midpoint of every rep gives
     // the JSON a time-distributed load record to adjudicate from.
-    val midCanaryName = "q01_profile_lineitem"
+    val midCanary = canaryNames.find(_ == "q01_profile_lineitem")
     val midProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
     val midIdx = queryList.size / 2
     for (rep <- 1 to reps; ((name, fn), idx) <- queryList.zipWithIndex) {
       // nudge the cleaner at each sweep boundary so rep N+1 starts
       // from the same storage state rep 1 did
       if (idx == 0 && rep > 1) System.gc()
-      if (idx == midIdx && SparkEntry.queries.contains(midCanaryName))
-        midProbes += noopSeconds(midCanaryName)(
-          SparkEntry.queries(midCanaryName)(spark, sfDir))
+      if (idx == midIdx) midCanary.foreach { n =>
+        midProbes += noopSeconds(n)(SparkEntry.queries(n)(spark, sfDir))
+      }
       timesByQuery(name) += noopSeconds(name)(fn(spark, sfDir))
     }
     val results = queryList.map { case (name, _) =>
@@ -81,8 +83,6 @@ object Bench {
     // contaminated during the sweep — the flag tells the reader to
     // distrust apparent regressions in THIS file rather than
     // re-adjudicate phantom ones (the round-7 q88/q89/q170 lesson).
-    val canaryNames = Seq("q01_profile_lineitem", "q88_scd2_collapse",
-      "q89_interval_overlap").filter(SparkEntry.queries.contains)
     val canary = canaryNames.map { n =>
       val rerun = noopSeconds(n)(SparkEntry.queries(n)(spark, sfDir))
       val sweep = results.toMap.getOrElse(n, -1.0)
@@ -93,7 +93,7 @@ object Bench {
     // canary query's own sweep median — the latter catches a transient
     // load window confined to the middle of a rep, which the
     // post-sweep reruns alone cannot see.
-    val midRef = results.toMap.getOrElse(midCanaryName, -1.0)
+    val midRef = midCanary.flatMap(results.toMap.get).getOrElse(-1.0)
     val midContaminated = midProbes.exists(p => p > 0 && midRef > 0 &&
       (p / midRef > 2.0 || midRef / p > 2.0))
     val canaryContaminated = midContaminated ||
@@ -141,13 +141,12 @@ object Bench {
     // explicitly asks for the full map here (~12 KB at 323 queries);
     // the durable copies below stay for history.
     val json =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","parallelism":${spark.sparkContext.defaultParallelism},"n_queries":${results.size},"queries_omitted":0,"failed":[${failed.mkString(",")}],"mean_sec":${r3(if (okResults.nonEmpty) total / okResults.size else -1.0)},"p50_sec":${r3(p50)},"queries":$qs,"canary":$canaryJson,"canary_mid":$canaryMidJson,"canary_contaminated":$canaryContaminated,"readjudicated":$readjJson,"full":"BENCH_FULL.json"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","parallelism":${spark.sparkContext.defaultParallelism},"n_queries":${results.size},"queries_omitted":0,"failed":[${failed.mkString(",")}],"mean_sec":${r3(if (okResults.nonEmpty) total / okResults.size else -1.0)},"p50_sec":${r3(p50)},"queries":$qs,"canary":$canaryJson,"canary_mid":$canaryMidJson,"canary_contaminated":$canaryContaminated,"readjudicated":$readjJson,"full":"${paths.last}"}"""
     println(json)
     // BENCH_FULL.json used to be clobbered by whichever same-session
     // run happened last (the r11 8-core sweep overwrote the 32-core
     // map); the cpus-suffixed copy keeps every core count's map.
-    for (path <- Seq("target/bench.json", "BENCH_FULL.json",
-                     s"BENCH_FULL_c$cpus.json")) {
+    for (path <- paths) {
       try {
         val out = java.nio.file.Paths.get(path)
         if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
@@ -171,4 +170,18 @@ object Bench {
         10
       }
     }
+
+  /** Files the result line goes to, the one `"full"` names last. A
+    * subset run (SPARK_GRAFT_BENCH_ONLY) writes only target/bench.json,
+    * so the committed full-sweep maps stay as the last full sweep left
+    * them. */
+  private[graft] def resultPaths(subset: Boolean, cpus: Int): Seq[String] =
+    if (subset) Seq("target/bench.json")
+    else Seq("target/bench.json", s"BENCH_FULL_c$cpus.json", "BENCH_FULL.json")
+
+  /** The canary queries a run times (q01 also mid-sweep): only those it
+    * sweeps, since a canary compares a rerun with its sweep median. */
+  private[graft] def canaries(swept: Seq[String]): Seq[String] =
+    Seq("q01_profile_lineitem", "q88_scd2_collapse", "q89_interval_overlap")
+      .filter(swept.contains)
 }

@@ -4,7 +4,14 @@ import graft.ddl.DdlGenerator
 import graft.diff.SchemaDiff
 import graft.inference.TypeInference
 import graft.inference.TypeInference.ColumnMeta
+import scala.util.Try
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Facade mirroring the reference's public API — the 9 methods +
   * constructor options of `RedshiftAutoSchema`
@@ -26,6 +33,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     "/data/parquet/x.csv" to the parquet reader — noted bug).
   *   - Lazy caching of metadata/diff follows RAS:77-79 via Scala lazy vals;
   *     the diff is cached as its collected rows, not as a plan.
+  *   - Work sized by the column count runs on the driver, like the
+  *     reference's pandas steps (RAS:82-91, RAS:202-225): a delimited
+  *     file's header line and the proposed ⟗ deployed diff. Neither
+  *     grows with the data, so this holds at any data size; the type
+  *     inference scan is the only data-sized Spark work of the flow.
   */
 final class RedshiftAutoSchema(
     spark: SparkSession,
@@ -69,11 +81,10 @@ final class RedshiftAutoSchema(
                path.toLowerCase.endsWith(".jsonl"))
         spark.read.option("primitivesAsString", "true").json(path)
       else {
-        val r = spark.read
-          .option("header", "true")
-          .option("sep", delimiter)
-          .option("quote", quotechar)
-        encoding.foreach(e => r.option("encoding", e))
+        val opts = Map("header" -> "true", "sep" -> delimiter,
+          "quote" -> quotechar) ++ encoding.map("encoding" -> _)
+        val r = spark.read.options(opts)
+        csvHeaderSchema(path, opts).foreach(r.schema)
         val csv = r.csv(path)
         // pandas.read_csv default na_values list (pandas 2.x docs).
         val naTokens = Seq("", "#N/A", "#N/A N/A", "#NA", "-1.#IND",
@@ -95,6 +106,33 @@ final class RedshiftAutoSchema(
     }
   }
 
+  /** The all-string schema Spark's CSV header inference would give
+    * `path`, computed on the driver without its `take(1)` job: the
+    * header line read with `CSVUtils.readHeaderLine` (codec, charset,
+    * line separator, comment and empty-line filter), split by the CSV
+    * parser and named by `CSVUtils.makeSafeHeader`, the steps
+    * `TextInputCSVDataSource.infer` runs after its job. The header is
+    * one line whatever the data size, so reading it here is safe at any
+    * scale. None — keep Spark's inferring read — unless `path` is one
+    * regular file, not a glob, with a header line. */
+  private def csvHeaderSchema(path: String,
+                              opts: Map[String, String]): Option[StructType] = {
+    val p = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val isFile = !path.exists("{}[]*?\\".contains(_)) &&
+      Try(p.getFileSystem(conf).getFileStatus(p).isFile).getOrElse(false)
+    if (!isFile) return None
+    val options = new CSVOptions(opts, true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    CSVUtils.readHeaderLine(p, options, conf)
+      .flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line)))
+      .map { tokens =>
+        val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+        StructType(CSVUtils.makeSafeHeader(tokens, caseSensitive, options)
+          .map(StructField(_, StringType)).toSeq)
+      }
+  }
+
   /** Inferred schema — at most one fused aggregation job; None on empty
     * input (RAS:243-245). Cached like RAS:77/147. Parquet sources take
     * the footer fast path: numeric columns decide from row-group
@@ -106,7 +144,9 @@ final class RedshiftAutoSchema(
       TypeInference.inferSchemaParquet(spark, file.get, loaded)
     else TypeInference.inferSchema(loaded)
 
-  /** A1: file header (RAS:82-91) — schema-only read, no data scan. */
+  /** A1: file header (RAS:82-91) — schema-only read, no data scan; for
+    * one delimited file the header line is read on the driver, so no
+    * Spark job runs ([[csvHeaderSchema]]). */
   def getColumnList: Seq[String] = loaded.columns.toSeq
 
   /** A2: schema existence (RAS:93-107 pg_namespace probe) — against the
@@ -135,18 +175,13 @@ final class RedshiftAutoSchema(
     DdlGenerator.tableDdl(schema, table, metadata, exportFieldName,
       exportFieldType, primaryKey, distKey, sortKey)
 
-  /** A7: ALTER TABLE ADD COLUMN per MISSING diff row (RAS:177-192).
-    * Filters the cached local diff frame, so it launches no Spark job
-    * once the diff has run. */
-  def generateColumnDdl(): Option[String] = {
-    val missing = evaluateTableDdlDiffs()
-      .filter(org.apache.spark.sql.functions.col("reason") === "MISSING")
-      .select("field", "proposed_type")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .toSeq
-    DdlGenerator.columnDdl(schema, table, missing)
-  }
+  /** A7: ALTER TABLE ADD COLUMN per MISSING diff row (RAS:177-192),
+    * read from the cached diff rows, so it launches no Spark job once
+    * the diff has run. */
+  def generateColumnDdl(): Option[String] =
+    DdlGenerator.columnDdl(schema, table, diffRows.collect {
+      case r if r.reason == "MISSING" => (r.field, r.proposedType)
+    })
 
   /** A8 (RAS:194-200). */
   def generateTablePermissions(): String =
@@ -156,21 +191,22 @@ final class RedshiftAutoSchema(
     * precedence order: the caller-supplied DataFrame(field,
     * deployed_type), the JDBC catalog when `conn` is set (the
     * reference's information_schema.columns read, RAS:215-216), else
-    * the Spark catalog. Cached like RAS:79/183: the diff runs once,
-    * its rows (at most one per column, never data-sized) are collected
-    * and served as a local frame, so later calls and actions on the
-    * result launch no Spark job. */
+    * the Spark catalog. Both sides are schema-sized (one row per
+    * column), so the diff runs on the driver ([[SchemaDiff.diffRows]])
+    * whatever the data size; only a JDBC deployed side costs a read.
+    * Cached like RAS:79/183: the rows are computed once and served as a
+    * local frame, so later calls and actions on the result launch no
+    * Spark job. */
   def evaluateTableDdlDiffs(): DataFrame = diffCached
 
-  private lazy val diffCached: DataFrame = {
-    val proposedRows = metadata.getOrElse(Seq.empty)
+  private lazy val diffRows: Seq[SchemaDiff.DiffRow] = {
+    val proposed = metadata.getOrElse(Seq.empty)
       .map(m => (m.field, m.proposedName))
-    val proposed = spark.createDataFrame(proposedRows)
-      .toDF("field", "proposed_type")
     val dep = deployed.orElse(conn.map(c =>
         graft.sources.JdbcCatalog.deployedFromJdbc(spark, c, schema, table)))
       .getOrElse(SchemaDiff.deployedFromCatalog(spark, schema, table))
-    val diff = SchemaDiff.diff(proposed, dep)
-    spark.createDataFrame(diff.collectAsList(), diff.schema)
+    SchemaDiff.diffRows(proposed, SchemaDiff.collectSide(dep, "deployed_type"))
   }
+
+  private lazy val diffCached: DataFrame = SchemaDiff.toFrame(spark, diffRows)
 }

@@ -83,7 +83,7 @@ object SparkEntry {
     "flag" -> "boolean", "id" -> "integer",
     "name" -> "character varying(256)", "note" -> "varchar(256)",
     "oldcol" -> "date")
-  private val classifyFixture = Seq(
+  private[graft] val classifyFixture = Seq(
     "int", "integer", "int4", "int2", "smallint", "bigint", "int8",
     "decimal", "numeric", "real", "float", "float8", "double precision",
     "boolean", "bool", "char", "bpchar", "varchar", "varchar(256)",

@@ -1,44 +1,89 @@
 package graft.diff
 
+import scala.jdk.CollectionConverters._
+
 import graft.types.TypeClass
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The schema-diff engine: proposed ⟗ deployed → per-column reason
   * classification (RedshiftAutoSchema.py:202-225).
   *
-  * Expressed as a declarative full-outer join + `when` chain so Catalyst
-  * plans it (the sides are column-count-sized → broadcast join, no
-  * shuffle). Classification precedence reproduces the pandas overwrite
-  * order at RAS:218-220: TYPE MISMATCH is assigned first for every row,
-  * then MISSING and DEPRECATED overwrite it — hence the reversed `when`
-  * order here.
+  * Both sides hold one row per column, never one per data row, so the
+  * diff runs on the driver like the reference's pandas merge: each side
+  * is collected once (a local frame collects without a Spark job, a
+  * JDBC catalog read is one), joined and classified with
+  * [[TypeClass.classify]], and the result is a local frame. The join
+  * keeps SQL full-outer semantics: duplicate fields pair every match,
+  * null fields never match. Classification precedence reproduces the
+  * pandas overwrite order at RAS:218-220: TYPE MISMATCH is assigned
+  * first for every row, then MISSING and DEPRECATED overwrite it, so
+  * MISSING and DEPRECATED are tested first here, on the null-ness of
+  * the type rather than on whether the field matched.
   */
 object SchemaDiff {
 
+  /** One diff row; `proposedType`/`deployedType` are null where that
+    * side has no type. */
+  final case class DiffRow(field: String, proposedType: String,
+                           deployedType: String, reason: String)
+
+  /** Schema of every frame [[diff]] returns; the input columns'
+    * metadata (a JDBC read's varchar width, say) is not carried. */
+  private val diffSchema: StructType = StructType(
+    Seq("field", "proposed_type", "deployed_type", "reason")
+      .map(StructField(_, StringType)))
+
+  /** (field, type) rows of a column-count-sized side, in frame order. */
+  private[graft] def collectSide(side: DataFrame, typeCol: String): Seq[(String, String)] =
+    side.select(col("field"), col(typeCol)).collect().toSeq
+      .map(r => (r.getString(0), r.getString(1)))
+
+  /** The diff of two collected sides: full outer join on field (proposed
+    * order first, each row with its matches in deployed order, then the
+    * unmatched deployed rows), reason as at RAS:218-220, `notype` rows
+    * dropped case-sensitively (RAS:222 — NaN != 'notype' is true in
+    * pandas, so DEPRECATED rows with null proposed_type survive the
+    * filter), rows without a reason dropped. */
+  def diffRows(proposed: Seq[(String, String)],
+               deployed: Seq[(String, String)]): Seq[DiffRow] = {
+    val byField = deployed.filter(_._1 != null).groupBy(_._1)
+    val matched = proposed.flatMap { case (f, pt) =>
+      byField.getOrElse(f, Seq((f, null))).map { case (_, dt) => (f, pt, dt) }
+    }
+    val proposedFields = proposed.map(_._1).toSet
+    val unmatched = deployed.collect {
+      case (f, dt) if f == null || !proposedFields(f) => (f, null, dt)
+    }
+    (matched ++ unmatched).flatMap { case (f, pt, dt) =>
+      val reason =
+        if (pt != null && dt == null) "MISSING"
+        else if (pt == null && dt != null) "DEPRECATED"
+        else if (TypeClass.classify(pt) != TypeClass.classify(dt))
+          "TYPE MISMATCH"
+        else null
+      if (reason == null || pt == "notype") None
+      else Some(DiffRow(f, pt, dt, reason))
+    }
+  }
+
+  /** [[diffRows]] as a local frame of [[diffSchema]]. */
+  private[graft] def toFrame(spark: SparkSession, rows: Seq[DiffRow]): DataFrame =
+    spark.createDataFrame(rows.map(r =>
+      Row(r.field, r.proposedType, r.deployedType, r.reason)).asJava,
+      diffSchema)
+
   /** @param proposed DataFrame(field, proposed_type)
     * @param deployed DataFrame(field, deployed_type)
-    * @return DataFrame(field, proposed_type, deployed_type, reason) with
-    *         only actual diffs (reason non-null), `notype` rows excluded
-    *         (RAS:222 — NaN != 'notype' is true in pandas, so DEPRECATED
-    *         rows with null proposed_type survive the filter). */
-  def diff(proposed: DataFrame, deployed: DataFrame): DataFrame = {
-    val p = col("proposed_type")
-    val d = col("deployed_type")
-    val classify = (c: String) => expr(TypeClass.classifySql(c))
-    // (no broadcast hint: Spark can't broadcast a full-outer build side;
-    // both inputs are column-count-sized, so the shuffle is negligible)
-    proposed.join(deployed, Seq("field"), "full_outer")
-      .withColumn("reason",
-        when(p.isNotNull && d.isNull, "MISSING")
-          .when(p.isNull && d.isNotNull, "DEPRECATED")
-          .when(classify("proposed_type") =!= classify("deployed_type"),
-            "TYPE MISMATCH"))
-      .filter(p.isNull || p =!= "notype")
-      .select(col("field"), p, d, col("reason"))
-      .filter(col("reason").isNotNull)
-  }
+    * @return local DataFrame(field, proposed_type, deployed_type,
+    *         reason) of the actual diffs ([[diffRows]]); no Spark job
+    *         runs when both sides are local frames. */
+  def diff(proposed: DataFrame, deployed: DataFrame): DataFrame =
+    toFrame(proposed.sparkSession, diffRows(
+      collectSide(proposed, "proposed_type"),
+      collectSide(deployed, "deployed_type")))
 
   /** Deployed-side schema from the Spark catalog, shaped like the
     * reference's information_schema.columns read (RAS:215-216: udt_name
@@ -56,8 +101,7 @@ object SchemaDiff {
     import org.apache.spark.sql.types._
     val qualified = s"$schema.$table"
     if (!spark.catalog.tableExists(qualified)) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType(Seq(StructField("field", StringType),
                        StructField("deployed_type", StringType))))
     }

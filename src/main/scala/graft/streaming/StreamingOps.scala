@@ -431,7 +431,13 @@ object StreamingOps {
     *
     * Tail-session closure depends on WALL-CLOCK idleness, so output
     * timing is trigger-dependent; [[sessionizeEventTime]] is the
-    * deterministic variant. */
+    * deterministic variant.
+    *
+    * Triggers: run it under `Trigger.Once` or a processing-time trigger.
+    * Under `Trigger.AvailableNow` the query never terminates, and
+    * `processAllAvailable()` never returns under any trigger, because
+    * the processing-time timeout makes every trigger plan one more
+    * timeout-check batch, so there is never a last batch. */
   def sessionize(events: Dataset[Event], gapMinutes: Int)
       : Dataset[UserSession] = {
     import events.sparkSession.implicits._

@@ -92,56 +92,52 @@ object RedshiftType {
   *     and simply omit the dead 'float' alias from class 6.
   */
 object TypeClass {
-  def classify(datatype: String): Int = {
-    val d = datatype.toLowerCase.trim
-    d match {
-      case "smallint" | "int2"                                   => 1
-      case "integer" | "int" | "int4"                            => 2
-      case "bigint" | "int8"                                     => 3
-      case "decimal" | "numeric"                                 => 4
-      case "real" | "float"                                      => 5
-      case "double precision" | "float8"                         => 6
-      case "boolean" | "bool"                                    => 7
-      case "char" | "character" | "nchar" | "bpchar"             => 8
-      case "varchar" | "varchar(256)" | "character varying" |
-           "character varying(256)" | "nvarchar" | "nvarchar(256)" |
-           "text"                                                => 9
-      case "varchar(65535)" | "character varying(65535)" |
-           "nvarchar(65535)"                                     => 10
-      case "date"                                                => 11
-      case "timestamp" | "timestamp without time zone"           => 12
-      case "timestamptz" | "timestamp with time zone"            => 13
-      // Extension class (not in the reference): keeps a deployed SUPER
-      // column distinct from varchar so complex columns diff clean.
-      case "super"                                               => 14
-      case _                                                     => 0
-    }
-  }
+  /** Each class id with the type names it holds, in match order — the
+    * one table [[classify]] and [[classifySql]] are both built from. */
+  val aliases: Seq[(Int, Seq[String])] = Seq(
+    1 -> Seq("smallint", "int2"),
+    2 -> Seq("integer", "int", "int4"),
+    3 -> Seq("bigint", "int8"),
+    4 -> Seq("decimal", "numeric"),
+    5 -> Seq("real", "float"),
+    6 -> Seq("double precision", "float8"),
+    7 -> Seq("boolean", "bool"),
+    8 -> Seq("char", "character", "nchar", "bpchar"),
+    9 -> Seq("varchar", "varchar(256)", "character varying",
+      "character varying(256)", "nvarchar", "nvarchar(256)", "text"),
+    10 -> Seq("varchar(65535)", "character varying(65535)",
+      "nvarchar(65535)"),
+    11 -> Seq("date"),
+    12 -> Seq("timestamp", "timestamp without time zone"),
+    13 -> Seq("timestamptz", "timestamp with time zone"),
+    // Extension class (not in the reference): keeps a deployed SUPER
+    // column distinct from varchar so complex columns diff clean.
+    14 -> Seq("super"))
+
+  private val classOf: Map[String, Int] =
+    aliases.flatMap { case (c, names) => names.map(_ -> c) }.toMap
+
+  /** Class id of a type name, 0 when unknown; equal to [[classifySql]]
+    * evaluated by Spark for every input (TypeClassSpec holds them
+    * equal): spaces only are trimmed, as Spark's `trim` does, the case
+    * is folded independently of the default locale, and null is 0. */
+  def classify(datatype: String): Int =
+    if (datatype == null) 0
+    else classOf.getOrElse(datatype.replaceAll("^ +| +$", "")
+      .toLowerCase(java.util.Locale.ROOT), 0)
 
   /** The same classifier as a SQL CASE expression over column `col` —
     * single source of truth reused verbatim by both the Spark diff query
-    * and the DuckDB oracle, so the two engines classify identically. */
+    * and the DuckDB oracle, so the two engines classify identically.
+    * NULL input: no WHEN matches (NULL IN (...) is not true) → ELSE 0,
+    * matching Python str(None/NaN) → unknown class 0. */
   def classifySql(col: String): String = {
-    def in(vals: String*) =
-      vals.map(v => s"'$v'").mkString("(", ", ", ")")
-    // NULL input: no WHEN matches (NULL IN (...) is not true) → ELSE 0,
-    // matching Python str(None/NaN) → unknown class 0.
-    s"""CASE
-       |  WHEN lower(trim($col)) IN ${in("smallint", "int2")} THEN 1
-       |  WHEN lower(trim($col)) IN ${in("integer", "int", "int4")} THEN 2
-       |  WHEN lower(trim($col)) IN ${in("bigint", "int8")} THEN 3
-       |  WHEN lower(trim($col)) IN ${in("decimal", "numeric")} THEN 4
-       |  WHEN lower(trim($col)) IN ${in("real", "float")} THEN 5
-       |  WHEN lower(trim($col)) IN ${in("double precision", "float8")} THEN 6
-       |  WHEN lower(trim($col)) IN ${in("boolean", "bool")} THEN 7
-       |  WHEN lower(trim($col)) IN ${in("char", "character", "nchar", "bpchar")} THEN 8
-       |  WHEN lower(trim($col)) IN ${in("varchar", "varchar(256)", "character varying", "character varying(256)", "nvarchar", "nvarchar(256)", "text")} THEN 9
-       |  WHEN lower(trim($col)) IN ${in("varchar(65535)", "character varying(65535)", "nvarchar(65535)")} THEN 10
-       |  WHEN lower(trim($col)) = 'date' THEN 11
-       |  WHEN lower(trim($col)) IN ${in("timestamp", "timestamp without time zone")} THEN 12
-       |  WHEN lower(trim($col)) IN ${in("timestamptz", "timestamp with time zone")} THEN 13
-       |  WHEN lower(trim($col)) = 'super' THEN 14
-       |  ELSE 0
-       |END""".stripMargin.replaceAll("\\s+", " ").trim
+    val whens = aliases.map {
+      case (c, Seq(name)) => s"WHEN lower(trim($col)) = '$name' THEN $c"
+      case (c, names) =>
+        s"WHEN lower(trim($col)) IN ${names.map(v => s"'$v'")
+          .mkString("(", ", ", ")")} THEN $c"
+    }
+    ("CASE" +: whens :+ "ELSE 0 END").mkString(" ")
   }
 }

@@ -208,4 +208,64 @@ class RedshiftAutoSchemaSpec extends SparkSpec {
       assert(alter == "ALTER TABLE default.t ADD COLUMN embedding super;")
     } finally spark.sql("DROP TABLE IF EXISTS default.graft_super_rt")
   }
+
+  /** Writes `bytes` as `name` into a fresh directory of its own and
+    * returns (file, directory): the directory read is Spark's inferring
+    * read of the same file. */
+  private def landed(name: String, bytes: Array[Byte]): (String, String) = {
+    val dir = Files.createTempDirectory("graft-test-hdr-")
+    dir.toFile.deleteOnExit()
+    val f = dir.resolve(name)
+    Files.write(f, bytes)
+    f.toFile.deleteOnExit()
+    (f.toString, dir.toString)
+  }
+
+  private def gzip(bytes: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(out)
+    gz.write(bytes); gz.close()
+    out.toByteArray
+  }
+
+  test("CSV header on the driver: same columns, types and DDL as Spark's header inference") {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    // (fixture, file name, bytes, encoding, header read on the driver)
+    val fixtures = Seq(
+      ("quoted delimiter", "q.csv",
+        "\"a|b\"|c\n1|x\n2|y\n".getBytes(utf8), None, true),
+      ("duplicate, empty and dotted names", "d.csv",
+        "x|X|x||a.b|\n1|2|3|4|5|6\n".getBytes(utf8), None, true),
+      ("leading blank lines", "b.csv",
+        "\n\n   \nq|r\n1|2\n".getBytes(utf8), None, true),
+      ("CRLF line ends", "crlf.csv",
+        "a|b\r\n1|2.5\r\n3|4\r\n".getBytes(utf8), None, true),
+      ("UTF-8 BOM", "bom.csv",
+        "\uFEFFa|b\n1|2\n".getBytes(utf8), None, true),
+      ("header only", "h.csv", "a|b\n".getBytes(utf8), None, true),
+      ("0 bytes", "empty.csv", Array.emptyByteArray, None, false),
+      ("gzip", "g.csv.gz", gzip("a|b\n1|2020-01-02\n".getBytes(utf8)),
+        None, true),
+      ("ISO-8859-1", "l.csv", "café|naïve\nç|1\n".getBytes(latin1),
+        Some("ISO-8859-1"), true))
+    def outcome[T](v: => T): Either[String, T] =
+      try Right(v) catch { case e: Exception => Left(e.getClass.getName) }
+    for ((label, name, bytes, enc, onDriver) <- fixtures) {
+      val (file, dir) = landed(name, bytes)
+      def ras(path: String) = new RedshiftAutoSchema(spark, "s", "t",
+        file = Some(path), encoding = enc)
+      val (fileCols, fileJobs) = countJobs(outcome(ras(file).getColumnList))
+      val (dirCols, dirJobs) = countJobs(outcome(ras(dir).getColumnList))
+      assert(fileCols == dirCols, s"$label: column list")
+      assert(outcome(ras(file).metadata) == outcome(ras(dir).metadata),
+        s"$label: metadata")
+      assert(outcome(ras(file).generateTableDdl()) ==
+        outcome(ras(dir).generateTableDdl()), s"$label: CREATE TABLE")
+      if (onDriver)
+        assert(fileJobs == 0 && dirJobs >= 1, s"$label: the file's header " +
+          s"read ran $fileJobs jobs, the directory's inferring read $dirJobs")
+      else assert(fileJobs == dirJobs, s"$label: falls back to the inferring read")
+    }
+  }
 }

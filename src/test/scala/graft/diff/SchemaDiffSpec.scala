@@ -3,6 +3,9 @@ package graft.diff
 import graft.SparkSpec
 import graft.ddl.DdlGenerator
 import graft.inference.TypeInference
+import graft.types.TypeClass
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, expr, when}
 
 /** Schema-diff engine vs RedshiftAutoSchema.py:202-225: reason matrix,
   * precedence, notype filter, missing-table and round-trip behavior. */
@@ -126,5 +129,122 @@ class SchemaDiffSpec extends SparkSpec {
       "narrowing must carry no DDL")
     assert(byField("gone")._5.isEmpty && !byField("gone")._4,
       "a dropped column must carry no DDL")
+  }
+
+  /** The diff as a full-outer join plus a `when` chain, the formulation
+    * `diff` replaced; the reference its driver join must reproduce. */
+  private def joinDiff(proposed: DataFrame, deployed: DataFrame): DataFrame = {
+    val p = col("proposed_type")
+    val d = col("deployed_type")
+    val classify = (c: String) => expr(TypeClass.classifySql(c))
+    proposed.join(deployed, Seq("field"), "full_outer")
+      .withColumn("reason",
+        when(p.isNotNull && d.isNull, "MISSING")
+          .when(p.isNull && d.isNotNull, "DEPRECATED")
+          .when(classify("proposed_type") =!= classify("deployed_type"),
+            "TYPE MISMATCH"))
+      .filter(p.isNull || p =!= "notype")
+      .select(col("field"), p, d, col("reason"))
+      .filter(col("reason").isNotNull)
+  }
+
+  /** Rows of a diff frame as a multiset, sorted for a readable failure. */
+  private def rowsOf(df: DataFrame) =
+    df.collect().toSeq.map(_.toSeq.map(Option(_))).sortBy(_.toString)
+
+  private def assertSameAsJoin(label: String, proposed: DataFrame,
+                               deployed: DataFrame): Unit = {
+    val got = SchemaDiff.diff(proposed, deployed)
+    val want = joinDiff(proposed, deployed)
+    // column metadata (a JDBC read's varchar width, say) is not carried
+    def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType, f.nullable))
+    assert(shape(got) == shape(want), s"$label: schema")
+    assert(rowsOf(got) == rowsOf(want), s"$label: rows")
+  }
+
+  private def side(typeCol: String, rows: Seq[(String, String)]) =
+    rows.map { case (f, t) => (Option(f), Option(t)) }.toDF("field", typeCol)
+
+  test("driver diff equals the full-outer-join formulation as multisets") {
+    val cases: Seq[(String, Seq[(String, String)], Seq[(String, String)])] = Seq(
+      ("duplicate proposed fields",
+        Seq("a" -> "int4", "a" -> "int8", "b" -> "date"),
+        Seq("a" -> "bigint", "c" -> "date")),
+      ("duplicate deployed fields",
+        Seq("a" -> "int4", "b" -> "bool"),
+        Seq("a" -> "integer", "a" -> "text", "a" -> "float8", "z" -> "int4", "z" -> "int2")),
+      ("duplicates on both sides",
+        Seq("a" -> "int4", "a" -> "varchar(256)"),
+        Seq("a" -> "integer", "a" -> "text")),
+      ("null field names never match",
+        Seq((null, "int4"), (null, "date"), "a" -> "int4"),
+        Seq((null, "int4"), "a" -> "int8")),
+      ("null types on present fields",
+        Seq("a" -> null, "b" -> null, "c" -> "int4", "d" -> null),
+        Seq("a" -> null, "b" -> "int4", "c" -> null, "e" -> null)),
+      ("notype and NOTYPE",
+        Seq("a" -> "notype", "b" -> "NOTYPE", "c" -> "notype", "d" -> "NOTYPE"),
+        Seq("a" -> "int4", "b" -> "int4", "e" -> "notype")),
+      ("empty proposed side", Seq.empty, Seq("a" -> "int4", "b" -> null)),
+      ("empty deployed side", Seq("a" -> "int4", "b" -> "notype"), Seq.empty),
+      ("both sides empty", Seq.empty, Seq.empty),
+      ("aliases, case and spaces",
+        Seq("a" -> "int4", "b" -> "TIMESTAMP", "c" -> " bool ", "d" -> "float8"),
+        Seq("a" -> "INTEGER", "b" -> "timestamp without time zone",
+          "c" -> "boolean", "d" -> "\tfloat8")))
+    for ((label, p, d) <- cases)
+      assertSameAsJoin(label, side("proposed_type", p), side("deployed_type", d))
+
+    // seeded random sides over small pools, so keys collide and repeat
+    val r = new scala.util.Random(11)
+    val fields = Seq("a", "b", "c", "d", null)
+    val types = Seq("int4", "integer", "int8", "bigint", "notype", "NOTYPE",
+      "varchar(256)", "text", "varchar(65535)", "date", "Date ", "super",
+      "geometry", "", null)
+    def draw() = Seq.fill(r.nextInt(6))(
+      (fields(r.nextInt(fields.size)), types(r.nextInt(types.size))))
+    for (i <- 1 to 12)
+      assertSameAsJoin(s"random case $i", side("proposed_type", draw()),
+        side("deployed_type", draw()))
+  }
+
+  test("driver diff equals the join against catalog and JDBC deployed frames") {
+    val proposed = Seq("id" -> "int8", "name" -> "varchar(65535)",
+      "flag" -> "bool", "extra" -> "date", "ghost" -> "notype")
+      .toDF("field", "proposed_type")
+    spark.sql("DROP TABLE IF EXISTS default.graft_diff_cat")
+    spark.sql("CREATE TABLE default.graft_diff_cat (id INT, name VARCHAR(256), " +
+      "flag BOOLEAN, gone DATE) USING parquet")
+    try assertSameAsJoin("catalog", proposed,
+      SchemaDiff.deployedFromCatalog(spark, "default", "graft_diff_cat"))
+    finally spark.sql("DROP TABLE IF EXISTS default.graft_diff_cat")
+    assertSameAsJoin("missing catalog table", proposed,
+      SchemaDiff.deployedFromCatalog(spark, "default", "graft_no_such_table"))
+
+    val url = "jdbc:derby:memory:graftdiff;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      st.execute("CREATE TABLE cols (\"column_name\" VARCHAR(128), " +
+        "udt VARCHAR(64), pos INT)")
+      st.execute("INSERT INTO cols VALUES ('id', 'int4', 1), " +
+        "('name', 'varchar(256)', 2), ('gone', 'date', 3), " +
+        "('name', 'text', 4), (NULL, 'int4', 5)")
+      st.close()
+    } finally c.close()
+    val jdbc = graft.sources.JdbcCatalog.deployedFromJdbc(spark,
+      graft.sources.JdbcConn(url), "s", "t", sqlOverride = Some(
+        "SELECT \"column_name\" AS \"index\", udt AS deployed_type " +
+          "FROM cols ORDER BY pos"))
+    assertSameAsJoin("JDBC", proposed, jdbc)
+  }
+
+  test("diff over local frames launches no Spark job") {
+    val p = Seq("a" -> "int4", "b" -> "date").toDF("field", "proposed_type")
+    val d = Seq("a" -> "text", "c" -> "int8").toDF("field", "deployed_type")
+    val (rows, jobs) = countJobs(SchemaDiff.diff(p, d).collect())
+    assert(jobs == 0, s"diff ran $jobs jobs")
+    assert(rows.map(_.getString(3)).toSet == Set("TYPE MISMATCH", "MISSING",
+      "DEPRECATED"))
   }
 }

@@ -1,10 +1,11 @@
 package graft.types
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.functions.expr
 
 /** Alias-equivalence classifier vs RedshiftAutoSchema.py:258-292,
   * including the documented bug-compat decisions (SURVEY.md §1). */
-class TypeClassSpec extends AnyFunSuite {
+class TypeClassSpec extends SparkSpec {
 
   test("the 13 reference classes") {
     assert(TypeClass.classify("smallint") == 1)
@@ -69,5 +70,28 @@ class TypeClassSpec extends AnyFunSuite {
       assert(fromName(t.name) == t)
     assert(NoType.ddl == "varchar(256)") // RAS:153 substitution
     assert(Super.ddl == "super")
+  }
+
+  test("classify equals classifySql run by Spark on every name, alias and edge case") {
+    import spark.implicits._
+    val names = {
+      import RedshiftType._
+      Seq(NoType, Bool, Int4, Int8, Float8, Date, Timestamp, Varchar256,
+        Varchar65535, Super).map(_.name)
+    }
+    val edges = Seq("INT4", "Double Precision", "  int4  ", "int4 ",
+      "\tint4", "int4\t", "\nbool", "\u00a0date", "", " ", "İNT",
+      "timestamp  without time zone", "varchar (256)", null)
+    val inputs = (SparkEntry.classifyFixture ++ names ++
+      TypeClass.aliases.flatMap(_._2) ++
+      TypeClass.aliases.flatMap(_._2).map(_.toUpperCase) ++ edges).distinct
+    val bySpark = inputs.map(Option(_)).toDF("datatype")
+      .select($"datatype", expr(TypeClass.classifySql("datatype")))
+      .collect().map(r => Option(r.getString(0)) -> r.getInt(1)).toMap
+    assert(bySpark.size == inputs.size)
+    for (d <- inputs)
+      assert(TypeClass.classify(d) == bySpark(Option(d)),
+        s"classify(${Option(d).map(v => "\"" + v + "\"")}) differs from classifySql")
+    assert(TypeClass.classify("\tint4") == 0 && TypeClass.classify(null) == 0)
   }
 }
