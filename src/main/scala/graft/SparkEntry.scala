@@ -1,7 +1,7 @@
 package graft
 
 import graft.diff.SchemaDiff
-import graft.inference.{DirectoryDrift, TypeInference}
+import graft.inference.{DirectoryDrift, ParquetFooters, TypeInference}
 import graft.operators.{Audit, Bpe, Clustering, Curation, Dedup, Drift, Eval, Linkage, Multimodal, Scale, Similarity, Sketch, Stats, TemporalJoins, TextAnalysis, UrlOps}
 import graft.oracle.InferenceOracle
 import graft.types.TypeClass
@@ -28,7 +28,11 @@ object SparkEntry {
     * exactly what DuckDB does when it reads the same file. Integer `div`
     * keeps full precision (a double round-trip would lose low bits). */
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df0 = s.read.parquet(s"$dir/$name.parquet")
+    // the schema comes from the file's footer on the driver, so resolving
+    // the table runs no Spark footer-merge job
+    val path = s"$dir/$name.parquet"
+    val df0 = ParquetFooters.fileSchema(s, path)
+      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
     // Defense against a session without our reader configs (e.g. the
     // driver's own smoke session): NTZ-annotated testdata timestamps
     // (isAdjustedToUTC=false micros) are cast to session-tz TIMESTAMP —
@@ -10184,26 +10188,26 @@ FROM (SELECT va, CAST(count(*) AS BIGINT) AS nb,
   private def pcaPowerOracle: String = {
     val dim = 64; val iters = 8
     val sb = new StringBuilder
-    sb ++= s"""WITH m AS (SELECT list_transform(embedding,
+    sb ++= s"""WITH m AS MATERIALIZED (SELECT list_transform(embedding,
     x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS mv
   FROM embeddings WHERE embedding IS NOT NULL),
 ii AS (SELECT unnest(range(0, $dim)) AS i),
 jj AS (SELECT unnest(range(0, $dim)) AS j),
 nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM m),
-s1 AS (SELECT i, CAST(sum(mv[i + 1]) AS HUGEINT) AS s
+s1 AS MATERIALIZED (SELECT i, CAST(sum(mv[i + 1]) AS HUGEINT) AS s
   FROM m CROSS JOIN ii GROUP BY i),
-s2 AS (SELECT i, j, CAST(sum(mv[i + 1] * mv[j + 1]) AS HUGEINT) AS s
+s2 AS MATERIALIZED (SELECT i, j, CAST(sum(mv[i + 1] * mv[j + 1]) AS HUGEINT) AS s
   FROM m CROSS JOIN ii CROSS JOIN jj GROUP BY i, j),
-cm AS (SELECT s2.i, s2.j, nn.n * s2.s - a.s * b.s AS c
+cm AS MATERIALIZED (SELECT s2.i, s2.j, nn.n * s2.s - a.s * b.s AS c
   FROM s2 JOIN s1 a ON a.i = s2.i JOIN s1 b ON b.i = s2.j CROSS JOIN nn),
 v0 AS (SELECT i, CASE WHEN i = 0 THEN CAST(1000000 AS HUGEINT)
   ELSE CAST(0 AS HUGEINT) END AS v FROM ii),
 """
     for (k <- 1 to iters) {
-      sb ++= s"""w$k AS (SELECT cm.i, CAST(sum(cm.c * v.v) AS HUGEINT) AS w
+      sb ++= s"""w$k AS MATERIALIZED (SELECT cm.i, CAST(sum(cm.c * v.v) AS HUGEINT) AS w
   FROM cm JOIN v${k - 1} v ON v.i = cm.j GROUP BY cm.i),
 mx$k AS (SELECT max(abs(w)) AS mx FROM w$k),
-v$k AS (SELECT i, CASE WHEN mx.mx > 0 THEN (w * 1000000) // mx.mx
+v$k AS MATERIALIZED (SELECT i, CASE WHEN mx.mx > 0 THEN (w * 1000000) // mx.mx
   ELSE CAST(0 AS HUGEINT) END AS v FROM w$k CROSS JOIN mx$k mx),
 """
     }

@@ -53,10 +53,13 @@ final case class ColumnProfile(
       case (Some(x), Some(y)) => Some(math.max(x, y))
       case (x, y)             => x.orElse(y)
     }
-    // forall-stats hold vacuously on empty sides: AND only when both
-    // sides have rows contributing to that check
+    // forall-stats hold vacuously on empty sides: AND only the sides
+    // with rows contributing to that check; with none on either side,
+    // both carry the aggregate's empty-input false (merge ≡ profile of
+    // the union, field for field)
     def andIf(aCount: Long, aVal: Boolean, bCount: Long, bVal: Boolean) =
-      (aCount == 0L || aVal) && (bCount == 0L || bVal)
+      if (aCount == 0L && bCount == 0L) aVal && bVal
+      else (aCount == 0L || aVal) && (bCount == 0L || bVal)
     ColumnProfile(field, sourceType, identifier,
       nonNull = nonNull + o.nonNull,
       boolDomain = andIf(nonNull, boolDomain, o.nonNull, o.boolDomain),
@@ -417,15 +420,43 @@ object ColumnProfiler {
   /** Like [[profile]] but also returns the exact row count, folded into
     * the same single pass (reference: empty file → metadata None,
     * RedshiftAutoSchema.py:243-245 — we detect it with no extra job). */
-  def profileWithCount(df: DataFrame): (Long, Seq[ColumnProfile]) = {
-    val fields = df.schema.fields.toSeq
-    if (fields.isEmpty) (0L, Seq.empty)
+  def profileWithCount(df: DataFrame): (Long, Seq[ColumnProfile]) =
+    profileBy(df, None)(Unkeyed)
+
+  /** The entry of an unkeyed profile in [[profileBy]]'s result. */
+  private[inference] val Unkeyed = ""
+
+  /** Row count and profiles of every column of `df` but `key`, per
+    * string value of the column `key`: one aggregate grouped by it, so
+    * many files of one schema profile in one scan
+    * ([[ParquetFooters.profileChildren]]); a key value with no rows has
+    * no entry. Without a key the one entry is [[Unkeyed]], present on
+    * zero rows too. Melted or wide as [[profile]] describes. */
+  private[inference] def profileBy(df: DataFrame, key: Option[String])
+      : Map[String, (Long, Seq[ColumnProfile])] = {
+    val fields = df.schema.fields.toSeq.filterNot(f => key.contains(f.name))
+    if (fields.isEmpty)
+      if (key.isEmpty) Map(Unkeyed -> (0L, Seq.empty)) else Map.empty
     // one column has no expression set to share: melting it only adds
     // the generator and a keyed shuffle (measured 14–38 % slower)
     else if (fields.size > 1 && fields.forall(f => kindOf(f.dataType) == StrKind))
-      profileMelted(df)
-    else profileWide(df)
+      profileMelted(df, key)
+    else profileWide(df, key)
   }
+
+  /** The profile a column gets from zero rows: zero counts, false
+    * flags, no min/max/len. */
+  private[inference] def zeroRow(f: StructField): ColumnProfile =
+    decode(f, None, 0)
+
+  /** The `p_key` column of a keyed aggregate, `key` renamed. */
+  private def keyCol(key: Option[String]): Seq[Column] =
+    key.toSeq.map(k => col(quote(k)).as("p_key"))
+
+  /** Aggregate rows by key value: `p_key`, or [[Unkeyed]]. */
+  private def byKey(rows: Array[Row], key: Option[String]): Map[String, Array[Row]] =
+    if (key.isEmpty) Map(Unkeyed -> rows)
+    else rows.groupBy(_.getAs[String]("p_key"))
 
   /** Columns per [[profileWide]] job: one job up to 256 columns. */
   private val maxColsPerJob = 256
@@ -440,12 +471,10 @@ object ColumnProfiler {
     * whole-stage codegen (interpreted `TungstenAggregationIterator`),
     * so the per-column expression set costs both planning and
     * execution time as the width grows. */
-  private[inference] def profileWide(df: DataFrame)
-      : (Long, Seq[ColumnProfile]) = {
-    val fields = df.schema.fields.toSeq
-    if (fields.isEmpty) return (0L, Seq.empty)
-    var rows = -1L
-    val profiles = fields.grouped(maxColsPerJob).toSeq.flatMap { chunk =>
+  private[inference] def profileWide(df: DataFrame, key: Option[String] = None)
+      : Map[String, (Long, Seq[ColumnProfile])] = {
+    val fields = df.schema.fields.toSeq.filterNot(f => key.contains(f.name))
+    val chunks = fields.grouped(maxColsPerJob).toSeq.map { chunk =>
       val views = chunk.zipWithIndex.flatMap { case (f, i) =>
         viewsFor(i, f.name, f.dataType)
       }
@@ -453,11 +482,19 @@ object ColumnProfiler {
         chunk.zipWithIndex.flatMap { case (f, i) =>
           aggsFor(i, f.dataType)
         }
-      val row = df.select(views: _*).agg(aggs.head, aggs.tail: _*).collect()(0)
-      rows = row.getAs[Long]("p_rows")
-      chunk.zipWithIndex.map { case (f, i) => decode(f, Some(row), i) }
+      val viewed = df.select(keyCol(key) ++ views: _*)
+      // unkeyed stays a global aggregate: it returns its row on zero rows
+      val agg = if (key.isEmpty) viewed.agg(aggs.head, aggs.tail: _*)
+        else viewed.groupBy("p_key").agg(aggs.head, aggs.tail: _*)
+      byKey(agg.collect(), key).map { case (k, rs) =>
+        k -> (rs(0).getAs[Long]("p_rows"),
+          chunk.zipWithIndex.map { case (f, i) => decode(f, Some(rs(0)), i) })
+      }
     }
-    (rows, profiles)
+    // every chunk sees the same rows, so the same key values
+    chunks.headOption.fold(Map.empty[String, (Long, Seq[ColumnProfile])]) {
+      _.map { case (k, (rows, _)) => k -> (rows, chunks.flatMap(_(k)._2)) }
+    }
   }
 
   /** All-string frames: melt to a (pos, x) stream with
@@ -473,20 +510,24 @@ object ColumnProfiler {
     * columns and carrying the rest through the generator measured
     * neutral to 1.5× slower. So does a single string column, which has
     * nothing to share. */
-  private[inference] def profileMelted(df: DataFrame)
-      : (Long, Seq[ColumnProfile]) = {
-    val fields = df.schema.fields.toSeq
+  private[inference] def profileMelted(df: DataFrame, key: Option[String] = None)
+      : Map[String, (Long, Seq[ColumnProfile])] = {
+    val fields = df.schema.fields.toSeq.filterNot(f => key.contains(f.name))
     // the cast gives char/varchar/collated columns one array element type
-    val melted = df.select(posexplode(array(fields.map(f =>
-      col(quote(f.name)).cast(StringType)): _*)).as(Seq("pos", "x")))
+    val melted = df.select(keyCol(key) :+ posexplode(array(fields.map(f =>
+      col(quote(f.name)).cast(StringType)): _*)).as(Seq("pos", "x")): _*)
     val aggs = count(lit(1)).as("p_rows") +: aggsFor(0, StringType)
-    val byPos = melted.select(col("pos") +: viewsFor(0, "x", StringType): _*)
-      .groupBy("pos").agg(aggs.head, aggs.tail: _*)
-      .collect().map(r => r.getInt(0) -> r).toMap
+    val grouping = key.map(_ => "p_key").toSeq :+ "pos"
+    val rows = melted
+      .select(grouping.map(col) ++ viewsFor(0, "x", StringType): _*)
+      .groupBy(grouping.map(col): _*).agg(aggs.head, aggs.tail: _*).collect()
     // empty input has no groups: every column decodes to the defaults
     // the global aggregate of the wide path returns on zero rows
-    val rows = byPos.headOption.fold(0L)(_._2.getAs[Long]("p_rows"))
-    (rows, fields.zipWithIndex.map { case (f, i) => decode(f, byPos.get(i), 0) })
+    byKey(rows, key).map { case (k, rs) =>
+      val byPos = rs.map(r => r.getAs[Int]("pos") -> r).toMap
+      k -> (byPos.headOption.fold(0L)(_._2.getAs[Long]("p_rows")),
+        fields.zipWithIndex.map { case (f, i) => decode(f, byPos.get(i), 0) })
+    }
   }
 
   /** One column's [[ColumnProfile]] from the `p{i}_*` fields of an

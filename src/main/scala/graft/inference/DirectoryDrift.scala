@@ -1,7 +1,6 @@
 package graft.inference
 
 import graft.inference.TypeInference.ColumnMeta
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Schema-drift inference across a HETEROGENEOUS file directory — the
@@ -15,9 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Semantics (generalizing the reference's single-table diff,
   * RedshiftAutoSchema.py:202-225, to file-vs-corpus):
-  *   1. every file is profiled independently — ONE fused aggregation
-  *      job per file, only a stats row per column reaches the driver
-  *      (ColumnProfiler.profile's ≤2-job contract, 100 TB-safe);
+  *   1. every file is profiled independently — its own stats row per
+  *      column, from its footer or from the one aggregate of its schema
+  *      group keyed by file (≤2 jobs per group, 100 TB-safe);
   *   2. the corpus schema is the SEMIGROUP MERGE of the per-file
   *      profiles ([[ColumnProfile.merge]]): merged inference ≡
   *      inference over the union of the files' rows — the exact
@@ -33,44 +32,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      evidence and are not drift (RAS:222's notype exclusion);
   *      corpus-`notype` columns are excluded the same way.
   *
-  * Scale shape: k files → k independent stats-only jobs (trivially
-  * schedulable in parallel; nothing but k × nCols profile records on
-  * the driver), one tiny local report frame out. No data row ever
+  * Scale shape: k files → k footer reads on the driver and one keyed
+  * stats-only aggregate per distinct schema
+  * ([[ParquetFooters.profileChildren]]: at most 2 jobs per schema
+  * group, none to resolve a file; nothing but k × nCols profile records
+  * on the driver), one tiny local report frame out. No data row ever
   * crosses files.
   */
 object DirectoryDrift {
-
-  /** Per-file profiles for a labeled set of frames (label = file name).
-    *
-    * Files are profiled CONCURRENTLY through a bounded thread pool
-    * (`parallelism` submitter threads): Spark schedules jobs from
-    * multiple threads natively, so k per-file fused-agg jobs overlap
-    * instead of queueing serially — on a wide landing directory the
-    * wall time is the longest file, not the sum. Result order is the
-    * input order regardless of completion order, and the downstream
-    * semigroup merge is commutative-associative anyway (spec-pinned),
-    * so profile order cannot affect the report. */
-  def profileFiles(files: Seq[(String, DataFrame)],
-                   parallelism: Int = 8)
-      : Seq[(String, Seq[ColumnProfile])] = {
-    require(parallelism >= 1, s"parallelism must be >= 1: $parallelism")
-    if (files.sizeIs <= 1 || parallelism == 1)
-      files.map { case (label, df) => label -> ColumnProfiler.profile(df) }
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(parallelism, files.size))
-      try {
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        val futs = files.map { case (label, df) =>
-          Future(label -> ColumnProfiler.profile(df))
-        }
-        Await.result(Future.sequence(futs), Duration.Inf)
-      } finally pool.shutdown()
-    }
-  }
 
   /** Corpus profiles: field-wise semigroup merge across files, field
     * order = first appearance across the file list. */
@@ -120,30 +89,9 @@ object DirectoryDrift {
   def inferDirectory(spark: SparkSession, dir: String,
                      parallelism: Int = 8)
       : (Seq[ColumnMeta], DataFrame) = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val children = fs.listStatus(path).map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .sortBy(_.getName)
+    val children = ParquetFooters.children(spark, dir)
     require(children.nonEmpty, s"no files under $dir")
-    // per-file profiles take the footer fast path (numeric columns
-    // decide from row-group metadata, FooterProfiler) — same bounded
-    // submitter pool either way
-    val named = children.toSeq.map(p => p.getName -> p.toString)
-    val perFile = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.max(1, math.min(parallelism, named.size)))
-      try {
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(named.map { case (label, p) =>
-          Future(label -> ColumnProfiler.profileParquetWithCount(
-            spark, p, spark.read.parquet(p))._2)
-        }), Duration.Inf)
-      } finally pool.shutdown()
-    }
+    val perFile = ParquetFooters.profileChildren(spark, children, parallelism)
     (mergedSchema(perFile), driftReport(spark, perFile))
   }
 }

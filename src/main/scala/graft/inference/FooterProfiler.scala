@@ -1,8 +1,7 @@
 package graft.inference
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
@@ -35,7 +34,9 @@ import org.apache.spark.sql.types._
   *
   * 100 TB shape: footers are KB-sized regardless of data volume;
   * k files → k footer reads through a bounded thread pool (no Spark
-  * job, no executor involvement). The scan fallback reads only the
+  * job, no executor involvement). A landing arrival reads each footer
+  * once for both schema and statistics ([[fromFooters]], called by
+  * [[ParquetFooters.profileChildren]]). The scan fallback reads only the
   * undecided columns (columnar pruning), so the fast path strictly
   * removes I/O. */
 object FooterProfiler {
@@ -65,38 +66,25 @@ object FooterProfiler {
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return None
     def dataFiles(st: FileStatus): Seq[FileStatus] =
-      if (st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith(".")) Seq.empty
+      if (ParquetFooters.hidden(st.getPath)) Seq.empty
       else if (st.isDirectory)
         fs.listStatus(st.getPath).toSeq.flatMap(dataFiles)
       else if (st.getLen > 0) Seq(st)
       else Seq.empty
     val files = dataFiles(fs.getFileStatus(root))
-    if (files.isEmpty) return None
+    if (files.isEmpty) None
+    else fromFooters(ParquetFooters.bounded(files, parallelism)(
+      ParquetFooters.readFooter(conf, _)), schema)
+  }
 
+  /** [[footerProfiles]] from footers already read: those of every data
+    * file of one table, `schema` its Spark schema. */
+  def fromFooters(footers: Seq[ParquetMetadata], schema: StructType)
+      : Option[(Long, Seq[Option[ColumnProfile]])] = {
     val n = schema.fields.length
     val aggs = Array.fill(n)(ColAgg())
     var totalRows = 0L
     var refSchema: org.apache.parquet.schema.MessageType = null
-
-    // footer reads in parallel (bounded) — KB-sized, driver-local
-    val footers = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(parallelism, files.size))
-      try {
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(files.map { f =>
-          Future {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(f.getPath, conf))
-            try r.getFooter finally r.close()
-          }
-        }), Duration.Inf)
-      } finally pool.shutdown()
-    }
 
     for (footer <- footers) {
       val msg = footer.getFileMetaData.getSchema

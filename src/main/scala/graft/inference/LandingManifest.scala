@@ -1,6 +1,5 @@
 package graft.inference
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -101,7 +100,8 @@ object LandingManifest {
   }
 
   /** Incremental drift: profile ONLY the files under `dir` that are
-    * not in `manifest` (bounded-pool concurrent, footer fast path),
+    * not in `manifest` (footers read once, one keyed scan per schema:
+    * [[ParquetFooters.profileChildren]]),
     * merge them with the stored profiles, and report each NEWCOMER
     * against the merged corpus schema with the usual vocabulary.
     *
@@ -112,29 +112,10 @@ object LandingManifest {
                  manifest: Seq[(String, Seq[ColumnProfile])],
                  dir: String, parallelism: Int = 8)
       : (Seq[(String, Seq[ColumnProfile])], DataFrame) = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val seen = manifest.map(_._1).toSet
-    val children = fs.listStatus(path).map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .filter(p => !seen.contains(p.getName))
-      .sortBy(_.getName)
-    val newEntries: Seq[(String, Seq[ColumnProfile])] =
-      if (children.isEmpty) Seq.empty
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(parallelism, children.length)))
-        try {
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          Await.result(Future.sequence(children.toSeq.map { p =>
-            Future(p.getName -> ColumnProfiler.profileParquetWithCount(
-              spark, p.toString, spark.read.parquet(p.toString))._2)
-          }), Duration.Inf)
-        } finally pool.shutdown()
-      }
+    val children = ParquetFooters.children(spark, dir)
+      .filterNot(p => seen.contains(p.getName))
+    val newEntries = ParquetFooters.profileChildren(spark, children, parallelism)
     val newNames = newEntries.map(_._1).toSet
     val report = DirectoryDrift
       .driftReport(spark, manifest ++ newEntries)

@@ -27,6 +27,45 @@ trait SparkSpec extends AnyFunSuite {
     (r, c.jobs)
   }
 
+  /** Runs `body` and returns, for the jobs it launched (job-group
+    * scoped, bus drained like [[countJobs]]), each job's name — the
+    * description it set itself (Spark's parallel file listing does), else
+    * its result stage's call site: a job that resolves a table by
+    * merging footers is `parquet at …` — and the input records their
+    * tasks read. */
+  def jobTrace[T](body: => T): (T, Seq[String], Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val group = s"graft-jobtrace-${java.util.UUID.randomUUID()}"
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            group == j.properties.getProperty("spark.jobGroup.id"))
+        {
+          j.stageInfos.foreach(si => stages.add(si.stageId))
+          val desc = j.properties.getProperty("spark.job.description")
+          names.add(if (desc != null && desc != "job trace") desc
+            else j.stageInfos.maxBy(_.stageId).name)
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job trace")
+    try {
+      val r = body
+      org.apache.spark.GraftBus.drain(sc)
+      (r, names.toArray(Array.empty[String]).toSeq, records.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
   /** DataFrame from (value) rows of a single string column. */
   def strCol(name: String, values: Seq[Option[String]]): DataFrame = {
     import spark.implicits._

@@ -21,8 +21,8 @@ class ColumnProfilerSpec extends SparkSpec {
       StructType(names.map(StructField(_, StringType))))
 
   private def assertSame(df: DataFrame): Unit = {
-    val (wideRows, wide) = ColumnProfiler.profileWide(df)
-    val (meltRows, melt) = ColumnProfiler.profileMelted(df)
+    val (wideRows, wide) = ColumnProfiler.profileWide(df)(ColumnProfiler.Unkeyed)
+    val (meltRows, melt) = ColumnProfiler.profileMelted(df)(ColumnProfiler.Unkeyed)
     assert(meltRows == wideRows)
     assert(melt.size == wide.size)
     melt.zip(wide).foreach { case (m, w) =>
@@ -82,7 +82,8 @@ class ColumnProfilerSpec extends SparkSpec {
 
   test("melted == wide on 0 rows and on a single column") {
     assertSame(frame(Seq("a", "b_id"), Seq.empty))
-    val (rows, empty) = ColumnProfiler.profileMelted(frame(Seq("a"), Seq.empty))
+    val (rows, empty) = ColumnProfiler.profileMelted(frame(Seq("a"), Seq.empty))(
+      ColumnProfiler.Unkeyed)
     assert(rows == 0L && empty.map(_.nonNull) == Seq(0L))
     assertSame(frame(Seq("only"), bigInts.map(Seq(_))))
   }

@@ -7,9 +7,13 @@ import graft.SparkSpec
 class DirectoryDriftSpec extends SparkSpec {
   import spark.implicits._
 
+  private def profiles(perFile: Seq[(String, org.apache.spark.sql.DataFrame)])
+      : Seq[(String, Seq[ColumnProfile])] =
+    perFile.map { case (label, df) => label -> ColumnProfiler.profile(df) }
+
   private def report(perFile: Seq[(String, org.apache.spark.sql.DataFrame)])
       : List[(String, String, String, String, String)] = {
-    val profs = DirectoryDrift.profileFiles(perFile)
+    val profs = profiles(perFile)
     DirectoryDrift.driftReport(spark, profs)
       .as[(String, String, String, String, String)].collect().toList
   }
@@ -17,7 +21,7 @@ class DirectoryDriftSpec extends SparkSpec {
   test("int4 file vs int8 file: drift flagged, merge widens") {
     val a = Seq(1L, 2L, 3L).toDF("k")
     val b = Seq(1L + Int.MaxValue, 5L).toDF("k")
-    val profs = DirectoryDrift.profileFiles(Seq("a" -> a, "b" -> b))
+    val profs = profiles(Seq("a" -> a, "b" -> b))
     assert(DirectoryDrift.mergedSchema(profs).map(m =>
       m.field -> m.proposedName) == Seq("k" -> "int8"))
     assert(report(Seq("a" -> a, "b" -> b)) ==
@@ -27,7 +31,7 @@ class DirectoryDriftSpec extends SparkSpec {
   test("merge ≡ inference over the union (the semigroup property)") {
     val a = Seq((1L, "x"), (2L, "y")).toDF("k", "s")
     val b = Seq((3L, "2020-01-01"), (4L, "zz")).toDF("k", "s")
-    val profs = DirectoryDrift.profileFiles(Seq("a" -> a, "b" -> b))
+    val profs = profiles(Seq("a" -> a, "b" -> b))
     val merged = DirectoryDrift.mergedSchema(profs)
       .map(m => m.field -> m.proposedName)
     val direct = TypeInference.inferSchema(a.unionByName(b)).get
@@ -58,7 +62,7 @@ class DirectoryDriftSpec extends SparkSpec {
   test("mixed source kinds (int file + numeric-string file) merge numerically") {
     val a = Seq(1L, 2L).toDF("k")
     val b = Seq("3", "4").toDF("k")
-    val profs = DirectoryDrift.profileFiles(Seq("a" -> a, "b" -> b))
+    val profs = profiles(Seq("a" -> a, "b" -> b))
     assert(DirectoryDrift.mergedSchema(profs).map(m =>
       m.field -> m.proposedName) == Seq("k" -> "int4"))
     assert(report(Seq("a" -> a, "b" -> b)).isEmpty)
@@ -80,7 +84,7 @@ class DirectoryDriftSpec extends SparkSpec {
       ("f2.parquet", "tag", null, "varchar(256)", "MISSING")))
   }
 
-  test("32-file directory: parallel profiling = serial report, jobs overlap") {
+  test("32-file directory: parallel profiling = serial report, ≤2 jobs per schema group") {
     val dir = s"/tmp/graft-test-driftdir32-${System.getProperty("user.name")}"
     // 32 files: every 4th is int8-wide on k, every 7th drops `tag`
     (0 until 32).foreach { i =>
@@ -90,41 +94,23 @@ class DirectoryDriftSpec extends SparkSpec {
       val df = if (i % 7 == 0) base.drop("tag") else base
       df.write.mode("overwrite").parquet(f"$dir/f$i%02d.parquet")
     }
-    // concurrency smoke: a listener counting concurrently-live jobs —
-    // 8 submitter threads over 32 files must overlap at least once
-    val live = new java.util.concurrent.atomic.AtomicInteger(0)
-    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val n = live.incrementAndGet()
-        peak.updateAndGet(p => math.max(p, n))
-      }
-      override def onJobEnd(
-          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        live.decrementAndGet()
+    // two schema groups, (k, tag) and (k): each profiles in one keyed
+    // aggregate of at most 2 jobs, and no job resolves a file
+    val ((mergedPar, par), jobsPar) = countJobs {
+      val (m, rep) = DirectoryDrift.inferDirectory(spark, dir, parallelism = 8)
+      (m, rep.as[(String, String, String, String, String)].collect().toList)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (mergedPar, repPar) =
-        DirectoryDrift.inferDirectory(spark, dir, parallelism = 8)
-      // listener events are async; give the bus a moment to drain
-      val deadline = System.nanoTime() + 5000000000L
-      while (live.get() != 0 && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val (mergedSer, repSer) =
-        DirectoryDrift.inferDirectory(spark, dir, parallelism = 1)
-      assert(mergedPar == mergedSer)
-      val par = repPar.as[(String, String, String, String, String)]
-        .collect().toList
-      val ser = repSer.as[(String, String, String, String, String)]
-        .collect().toList
-      assert(par == ser && par.nonEmpty)
-      // int8 drift on the narrow files, MISSING tag on the dropped ones
-      assert(par.exists(_._5 == "TYPE DRIFT"))
-      assert(par.exists(_._5 == "MISSING"))
-      assert(peak.get() >= 2,
-        s"expected concurrent per-file jobs, peak=${peak.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (mergedSer, repSer) =
+      DirectoryDrift.inferDirectory(spark, dir, parallelism = 1)
+    assert(mergedPar == mergedSer)
+    val ser = repSer.as[(String, String, String, String, String)]
+      .collect().toList
+    assert(par == ser && par.nonEmpty)
+    // int8 drift on the narrow files, MISSING tag on the dropped ones
+    assert(par.exists(_._5 == "TYPE DRIFT"))
+    assert(par.exists(_._5 == "MISSING"))
+    val groups = 2
+    assert(jobsPar <= 2 * groups,
+      s"expected at most 2 jobs per schema group, ran $jobsPar")
   }
 }

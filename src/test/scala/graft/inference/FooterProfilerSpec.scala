@@ -46,7 +46,7 @@ class FooterProfilerSpec extends SparkSpec {
     assert(perCol.map(_.isDefined) == Seq(true, true, false, false, false))
     val (rowsFast, fast) =
       ColumnProfiler.profileParquetWithCount(spark, dir, read)
-    val (rowsScan, scan) = ColumnProfiler.profileWide(read)
+    val (rowsScan, scan) = ColumnProfiler.profileWide(read)(ColumnProfiler.Unkeyed)
     assert(rowsFast == rowsScan)
     assert(fast == scan)
   }

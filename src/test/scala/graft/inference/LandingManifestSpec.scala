@@ -34,10 +34,9 @@ class LandingManifestSpec extends SparkSpec {
       .write.parquet(s"$dir/g1b.parquet")
     Seq((3L, "c")).toDF("k", "s").repartition(1)
       .write.parquet(s"$dir/g1c.parquet")
-    val gen1 = DirectoryDrift.profileFiles(Seq(
-      "g1a.parquet" -> spark.read.parquet(s"$dir/g1a.parquet"),
-      "g1b.parquet" -> spark.read.parquet(s"$dir/g1b.parquet"),
-      "g1c.parquet" -> spark.read.parquet(s"$dir/g1c.parquet")))
+    val gen1 = ParquetFooters.profileChildren(spark,
+      Seq("g1a.parquet", "g1b.parquet", "g1c.parquet")
+        .map(f => new org.apache.hadoop.fs.Path(s"$dir/$f")))
     val mpath = s"/tmp/graft-test-manifest-store-${System.getProperty("user.name")}"
     LandingManifest.write(spark, mpath, gen1)
     // generation 2: one widened file, one with a dropped column
@@ -52,25 +51,27 @@ class LandingManifestSpec extends SparkSpec {
         .collect().toList)
     }
     assert(newEntries.map(_._1) == Seq("g2a.parquet", "g2b.parquet"))
-    // per NEW file: one schema/footer read + at most one fused scan
-    // (string column; g2b is all-numeric → footer-only) — and NOTHING
-    // for the three gen-1 files
-    assert(jobs <= 4, s"expected ≤2 jobs per new file (new files only), got $jobs")
-    // equivalence with profiling the whole directory from scratch —
-    // which must cost strictly more jobs (it re-reads gen-1)
-    val ((_, fullRep), jobsFull) =
+    // the new files form two schema groups: (k, s) scans its string
+    // column in one keyed aggregate, g2b (k only) is footer-only
+    assert(jobs <= 2, s"expected ≤2 jobs for one scanned schema group, got $jobs")
+    // equivalence with profiling the whole directory from scratch
+    val ((_, fullRep), _) =
       countJobs(DirectoryDrift.inferDirectory(spark, dir))
     val expected = fullRep
       .filter($"file".isin("g2a.parquet", "g2b.parquet"))
       .as[(String, String, String, String, String)].collect().toList
     assert(report == expected && report.nonEmpty)
-    assert(jobs < jobsFull,
-      s"incremental run ($jobs jobs) must undercut full re-profile ($jobsFull)")
+    // only newcomers are scanned: the incremental run reads g2a's one
+    // row, the full re-profile the four rows of g1a-g1c and g2a
+    val (_, _, readNew) = jobTrace(LandingManifest.driftSince(spark, manifest, dir))
+    val (_, _, readFull) = jobTrace(DirectoryDrift.inferDirectory(spark, dir))
+    assert(readNew == 1L && readFull == 4L,
+      s"incremental run must read only newcomer rows: $readNew of $readFull")
     // merged corpus profiles match the from-scratch merge
-    val fullProfiles = DirectoryDrift.profileFiles(
+    val fullProfiles = ParquetFooters.profileChildren(spark,
       Seq("g1a.parquet", "g1b.parquet", "g1c.parquet",
         "g2a.parquet", "g2b.parquet").map(f =>
-        f -> spark.read.parquet(s"$dir/$f")))
+        new org.apache.hadoop.fs.Path(s"$dir/$f")))
     assert(DirectoryDrift.mergeProfiles(manifest ++ newEntries) ==
       DirectoryDrift.mergeProfiles(fullProfiles))
     // second run with the updated manifest: nothing new, zero jobs
