@@ -1902,8 +1902,7 @@ object SparkEntry {
     "q170_pca_power" -> ((s, dir) =>
       Similarity.pcaTopComponent(t(s, dir, "embeddings"), "embedding",
         dim = 64, iterations = 8)),
-    // ---- batch multi-touch linear attribution (the streaming
-    //      purchaseAttribution's gate-exact batch twin): each purchase
+    // ---- batch multi-touch linear attribution: each purchase
     //      splits 10⁶ micro-credits across its trailing-hour touches
     //      via the banded equi-join; unattributed mass surfaces
     //      explicitly. ----

@@ -59,24 +59,41 @@ object DirectoryDrift {
       ColumnMeta(p.field, p.sourceType.simpleString, TypeInference.decide(p))
     }
 
-  /** Per-file drift report: DataFrame(file, field, file_type,
-    * merged_type, reason), only actual drifts (reason non-null),
-    * ordered (file, field). `file_type` is null on MISSING rows. */
-  def driftReport(spark: SparkSession,
-                  perFile: Seq[(String, Seq[ColumnProfile])]): DataFrame = {
-    val merged = mergeProfiles(perFile)
-      .map(p => p.field -> TypeInference.decide(p).name)
-      .filter(_._2 != "notype")
-    val rows = for {
-      (file, ps) <- perFile
-      fileTypes = ps.map(p => p.field -> TypeInference.decide(p).name).toMap
-      (field, mt) <- merged
-      reason <- fileTypes.get(field) match {
+  /** The file-vs-corpus drift rule, on the driver: for each `corpus`
+    * column in order, `MISSING` when `file` lacks it, `TYPE DRIFT` when
+    * the file infers another type. A column the file holds all-null
+    * (`notype`) is no evidence, and a corpus column that is `notype` is
+    * never reported. Rows are (field, file type, corpus type, reason);
+    * the file type is None on MISSING rows. */
+  def driftRows(corpus: Seq[ColumnProfile], file: Seq[ColumnProfile])
+      : Seq[(String, Option[String], String, String)] = {
+    val fileTypes = file.map(p => p.field -> TypeInference.decide(p).name).toMap
+    for {
+      p <- corpus
+      ct = TypeInference.decide(p).name if ct != "notype"
+      reason <- fileTypes.get(p.field) match {
         case None           => Some("MISSING")
         case Some("notype") => None // no evidence in this file ≠ drift
-        case Some(ft)       => if (ft != mt) Some("TYPE DRIFT") else None
+        case Some(ft)       => if (ft != ct) Some("TYPE DRIFT") else None
       }
-    } yield (file, field, fileTypes.get(field).orNull, mt, reason)
+    } yield (p.field, fileTypes.get(p.field), ct, reason)
+  }
+
+  /** Per-file drift report: DataFrame(file, field, file_type,
+    * merged_type, reason), only actual drifts of each file against the
+    * merge of all of them ([[driftRows]]), ordered (file, field). `file_type` is null on MISSING rows. */
+  def driftReport(spark: SparkSession,
+                  perFile: Seq[(String, Seq[ColumnProfile])]): DataFrame =
+    reportAgainst(spark, mergeProfiles(perFile), perFile)
+
+  /** The [[driftReport]] frame for `files` against a given corpus. */
+  private[inference] def reportAgainst(spark: SparkSession,
+      corpus: Seq[ColumnProfile],
+      files: Seq[(String, Seq[ColumnProfile])]): DataFrame = {
+    val rows = for {
+      (file, ps) <- files
+      (field, ft, ct, reason) <- driftRows(corpus, ps)
+    } yield (file, field, ft.orNull, ct, reason)
     // sort key excludes file_type: it is null on MISSING rows
     spark.createDataFrame(rows.sortBy(r => (r._1, r._2)))
       .toDF("file", "field", "file_type", "merged_type", "reason")

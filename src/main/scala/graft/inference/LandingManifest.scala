@@ -116,11 +116,7 @@ object LandingManifest {
     val children = ParquetFooters.children(spark, dir)
       .filterNot(p => seen.contains(p.getName))
     val newEntries = ParquetFooters.profileChildren(spark, children, parallelism)
-    val newNames = newEntries.map(_._1).toSet
-    val report = DirectoryDrift
-      .driftReport(spark, manifest ++ newEntries)
-      .filter(org.apache.spark.sql.functions.col("file").isin(
-        newNames.toSeq: _*))
-    (newEntries, report)
+    val corpus = DirectoryDrift.mergeProfiles(manifest ++ newEntries)
+    (newEntries, DirectoryDrift.reportAgainst(spark, corpus, newEntries))
   }
 }

@@ -1531,13 +1531,29 @@ object Dedup {
     * digests hash-aggregate; first-occurrence is one min-struct
     * aggregate per digest joined back on the digest — no pair space
     * anywhere. */
-  /** The CDC chunk frame behind [[cdcChunkDedup]] (and its streaming
-    * twin): one row per (document, chunk) with the chunk's token count
-    * and content digest. Columns (_id, _chunk: struct(_cchunk, _sub),
-    * _ctoks, _d). */
-  private[graft] def cdcChunks(df: DataFrame, idCol: String,
-                               textCol: String, avgChunkTokens: Int,
-                               maxChunkTokens: Int): DataFrame = {
+  def cdcChunkDedup(df: DataFrame, idCol: String, textCol: String,
+                    avgChunkTokens: Int = 8,
+                    maxChunkTokens: Int = 64): DataFrame = {
+    val reserved = Set("n_chunks", "n_kept", "n_dropped", "n_tokens_kept")
+    require(!reserved.contains(idCol),
+      s"cdcChunkDedup: idCol `$idCol` collides with an output column")
+    val chunks = cdcChunks(df, idCol, textCol, avgChunkTokens,
+      maxChunkTokens)
+    val first = chunks.groupBy(col("_d"))
+      .agg(min(struct(col("_id"), col("_chunk"))).as("_first"))
+    val marked = chunks.join(first, Seq("_d"))
+      .withColumn("_kept",
+        col("_id") === col("_first._id") &&
+          col("_chunk") === col("_first._chunk"))
+    cdcReport(df, idCol, marked)
+  }
+
+  /** The CDC chunk frame behind [[cdcChunkDedup]]: one row per
+    * (document, chunk) with the chunk's token count and content
+    * digest. Columns (_id, _chunk: struct(_cchunk, _sub), _ctoks, _d). */
+  private def cdcChunks(df: DataFrame, idCol: String,
+                        textCol: String, avgChunkTokens: Int,
+                        maxChunkTokens: Int): DataFrame = {
     require(avgChunkTokens >= 2 && avgChunkTokens <= 65536,
       s"avgChunkTokens must be in [2, 65536]: $avgChunkTokens")
     require(maxChunkTokens >= avgChunkTokens && maxChunkTokens <= 65536,
@@ -1572,11 +1588,11 @@ object Dedup {
           x => x.getField("_tok")), " ")).as("_d"))
   }
 
-  /** Per-document survival report over kept-marked chunks — shared by
-    * the batch and streaming CDC paths. `marked` needs (_id, _ctoks,
-    * _kept); `ids` restores zero-chunk documents. */
-  private[graft] def cdcReport(ids: DataFrame, idCol: String,
-                               marked: DataFrame): DataFrame = {
+  /** [[cdcChunkDedup]]'s per-document survival report over
+    * kept-marked chunks. `marked` needs (_id, _ctoks, _kept); `ids`
+    * restores zero-chunk documents. */
+  private def cdcReport(ids: DataFrame, idCol: String,
+                        marked: DataFrame): DataFrame = {
     val perDoc = marked.groupBy(col("_id"))
       .agg(count(lit(1)).as("n_chunks"),
         count(when(col("_kept"), lit(1))).as("n_kept"),
@@ -1591,23 +1607,6 @@ object Dedup {
         coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
         coalesce(col("n_tokens_kept"), lit(0L)).as("n_tokens_kept"))
       .orderBy(idCol)
-  }
-
-  def cdcChunkDedup(df: DataFrame, idCol: String, textCol: String,
-                    avgChunkTokens: Int = 8,
-                    maxChunkTokens: Int = 64): DataFrame = {
-    val reserved = Set("n_chunks", "n_kept", "n_dropped", "n_tokens_kept")
-    require(!reserved.contains(idCol),
-      s"cdcChunkDedup: idCol `$idCol` collides with an output column")
-    val chunks = cdcChunks(df, idCol, textCol, avgChunkTokens,
-      maxChunkTokens)
-    val first = chunks.groupBy(col("_d"))
-      .agg(min(struct(col("_id"), col("_chunk"))).as("_first"))
-    val marked = chunks.join(first, Seq("_d"))
-      .withColumn("_kept",
-        col("_id") === col("_first._id") &&
-          col("_chunk") === col("_first._chunk"))
-    cdcReport(df, idCol, marked)
   }
 
   /** TEMPLATE detection — near-exact dedup for documents that differ
@@ -1783,7 +1782,8 @@ object Dedup {
     require(minDup >= 1, s"minDup must be >= 1: $minDup")
     require(storeSpans.columns.contains("_dig"),
       "storeSpans must carry the `_dig` span-digest column " +
-        "(the spanDedupStream store layout)")
+        "(one row per accepted span: idCol, _dig = md5 of the span's " +
+        "sentences, as sentenceSpanDigests writes it)")
     val docs = sentenceFrame(batch, idCol, textCol)
     val spans = spanFrame(docs, idCol, span)
     val storeDigs = storeSpans.select(col("_dig")).distinct()
@@ -1893,9 +1893,9 @@ object Dedup {
       .orderBy(idCol)
   }
 
-  /** The span-digest frame for a batch of accepted documents — what
-    * [[graft.streaming.StreamingOps.spanDedupStream]] appends to the
-    * store: (idCol, _dig). */
+  /** The span-digest frame for a batch of accepted documents — the
+    * rows a pipeline appends to the [[spanDedupAgainstStore]] store:
+    * (idCol, _dig). */
   def sentenceSpanDigests(df: DataFrame, idCol: String,
                           textCol: String, span: Int = 3): DataFrame = {
     spanGuard(idCol, textCol, span, "sentenceSpanDigests")

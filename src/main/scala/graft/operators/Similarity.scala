@@ -804,10 +804,10 @@ object Similarity {
     require(store.columns.contains(idCol) && store.columns.contains(vecCol),
       s"store must carry (`$idCol`, `$vecCol`) " +
         s"(found: ${store.columns.mkString(", ")})")
-    // Empty-store fast path (the first batch of a fresh pipeline, and
-    // the streaming twin's bootstrap): nothing to train on, nothing to
-    // compare against — every new vector reports clean. The isEmpty
-    // probe is a limit-1 job (the trainCentroids precedent).
+    // Empty-store fast path (the first batch of a fresh pipeline):
+    // nothing to train on, nothing to compare against — every new
+    // vector reports clean. The isEmpty probe is a limit-1 job (the
+    // trainCentroids precedent).
     if (store.isEmpty)
       return newVecs.select(col(idCol),
         lit(0L).as("n_candidates"),

@@ -27,12 +27,13 @@ import org.apache.spark.sql.functions._
   *   - [[bandedRangeJoin]]: a key with k× the rows spreads over its
   *     bands — per-task work is bounded by rows-per-(key, band)², not
   *     rows-per-key², so a hot user dilutes across time.
-  *   - [[asOf]] (and StreamingOps.sessionize, which shares the shape):
-  *     partitioned by the bare key, so one hot key is one sorted task —
-  *     O(n log n) in that key's rows, never n². If a single key
-  *     outgrows an executor, [[asOfSalted]] pre-splits by a time-range
-  *     salt and runs the same window per (key, slice) with the
-  *     boundary right-row replicated — same results, bounded tasks.
+  *   - [[asOf]] (and q28's StreamingOps.sessionizeBatch, which shares
+  *     the shape): partitioned by the bare key, so one hot key is one
+  *     sorted task — O(n log n) in that key's rows, never n². If a
+  *     single key outgrows an executor, [[asOfSalted]] pre-splits by
+  *     a time-range salt and runs the same window per (key, slice)
+  *     with the boundary right-row replicated — same results, bounded
+  *     tasks.
   */
 object TemporalJoins {
 
@@ -665,11 +666,10 @@ object TemporalJoins {
     }.drop(s"${prefix}_vto")
   }
 
-  /** Batch multi-touch LINEAR attribution — the batch twin of
-    * [[graft.streaming.StreamingOps.purchaseAttribution]], gate-exact:
-    * every conversion splits 10⁶ micro-credits equally (floor
-    * division) across the user's touch events inside the trailing
-    * window (t_conv − W, t_conv], and the per-channel totals answer
+  /** Batch multi-touch LINEAR attribution, gate-exact (q171): every
+    * conversion splits 10⁶ micro-credits equally (floor division)
+    * across the user's touch events inside the trailing window
+    * (t_conv − W, t_conv], and the per-channel totals answer
     * "which touch type drives conversions" without last-click's
     * winner-take-all bias. Conversions with no in-window touch report
     * under the `__unattributed__` channel at full 10⁶ each — mass that

@@ -29,4 +29,43 @@ class BenchSpec extends AnyFunSuite {
       Seq("q89_interval_overlap"))
     assert(Bench.canaries(Seq("q07_schema_diff")).isEmpty)
   }
+
+  // 323 names at the longest real query name's length (28 characters)
+  private val names = (1 to 323).map(i => f"q$i%03d_" + "x" * 23)
+  private def report(results: Seq[(String, Double)],
+                     readj: Seq[(String, Double, Double)]) =
+    Bench.report("testdata/sf0.1", 32, results,
+      Bench.canaries(SparkEntry.queries.keys.toSeq)
+        .map(n => (n, 1234.5678, 1234.5678)),
+      Seq(1.0, 2.0, 3.0), canaryContaminated = true, readj,
+      "BENCH_FULL.json")
+
+  test("report: the headline stays under 1.5 KB with every query failed") {
+    val readj = names.take(10).map(n => (n, 12345.678, 12345.678))
+    val (durable, line) = report(names.map(_ -> -1.0), readj)
+    val bytes = line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    assert(bytes <= 1500, s"$bytes bytes: $line")
+    assert(line.contains("\"n_failed\":323"), line)
+    assert(line.contains("\"" + names.head + "\""), "lists failed names")
+    assert(!line.contains("\"queries\""), "the per-query map stays durable")
+    for (k <- Seq("metric", "value", "n_queries", "failed", "mean_sec",
+        "p50_sec", "parallelism", "canary", "canary_contaminated",
+        "readjudicated", "full"))
+      assert(line.contains("\"" + k + "\":"), s"headline lacks $k: $line")
+    assert(readj.forall(r => line.contains("\"" + r._1 + "\":{")), line)
+    assert(names.forall(n => durable.contains("\"" + n + "\":-1.0")))
+  }
+
+  test("report: the durable record holds every query's seconds") {
+    val results = names.zipWithIndex.map { case (n, i) => n -> (i + 0.25) }
+    val (durable, line) = report(results, Seq.empty)
+    val queries = "\"queries\":" + results
+      .map { case (n, v) => "\"" + n + "\":" + v }.mkString("{", ",", "}")
+    assert(durable.contains(queries), durable)
+    assert(durable.contains("\"n_queries\":323"))
+    assert(durable.contains("\"sf\":\"testdata/sf0.1\""))
+    assert(durable.contains("\"canary_mid\":[1.000,2.000,3.000]"))
+    assert(line.contains("\"failed\":[],\"mean_sec\":161.250"), line)
+    assert(line.getBytes("UTF-8").length <= 1500, line)
+  }
 }
