@@ -150,13 +150,14 @@ object Bench {
   /** The keys the headline keeps from the durable record. */
   private val headlineKeys = Seq("metric", "value", "unit", "parallelism",
     "n_queries", "n_failed", "failed", "mean_sec", "p50_sec", "canary",
-    "canary_contaminated", "readjudicated", "full")
+    "canary_contaminated", "n_readjudicated", "readjudicated", "full")
 
   /** The run's two JSON records: the durable one (every key, the full
     * per-query `queries` map, failed queries at -1.0) and the stdout
     * headline, which drops `queries`, `sf`, `queries_omitted` and
-    * `canary_mid` and lists as many failed names as fit in
-    * [[headlineBytes]] (`n_failed` counts them all). */
+    * `canary_mid` and lists as many readjudicated entries, then as many
+    * failed names, as fit in [[headlineBytes]] (`n_readjudicated` and
+    * `n_failed` count them all). */
   private[graft] def report(sfDir: String, parallelism: Int,
       results: Seq[(String, Double)], canary: Seq[(String, Double, Double)],
       midProbes: Seq[Double], canaryContaminated: Boolean,
@@ -170,6 +171,8 @@ object Bench {
     val ok = results.map(_._2).filter(_ >= 0)
     val total = ok.sum
     val failed = results.collect { case (k, v) if v < 0 => str(k) }
+    val readj = readjudicated.map { case (n, s, iso) =>
+      n -> obj(Seq("sweep" -> r3(s), "isolated" -> r3(iso))) }
     val fields = Seq(
       "metric" -> str("total"), "value" -> r3(total), "unit" -> str("sec"),
       "sf" -> str(sfDir), "parallelism" -> parallelism.toString,
@@ -183,20 +186,26 @@ object Bench {
         n -> obj(Seq("sweep" -> r3(sweep), "rerun" -> r3(rerun))) }),
       "canary_mid" -> arr(midProbes.map(r3)),
       "canary_contaminated" -> canaryContaminated.toString,
-      "readjudicated" -> obj(readjudicated.map { case (n, s, iso) =>
-        n -> obj(Seq("sweep" -> r3(s), "isolated" -> r3(iso))) }),
+      "n_readjudicated" -> readj.size.toString,
+      "readjudicated" -> obj(readj),
       "full" -> str(full))
     val kept = fields.filter { case (k, _) => headlineKeys.contains(k) }
-    def headline(nNames: Int): String = obj(kept.map {
-      case ("failed", _) => "failed" -> arr(failed.take(nNames))
+    def headline(nFailed: Int, nReadj: Int): String = obj(kept.map {
+      case ("failed", _) => "failed" -> arr(failed.take(nFailed))
+      case ("readjudicated", _) => "readjudicated" -> obj(readj.take(nReadj))
       case f => f
     })
-    // the line grows with each name listed: keep the longest that fits
-    val line = (failed.size to 1 by -1).iterator.map(headline)
-      .find(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <=
-        headlineBytes)
-      .getOrElse(headline(0))
-    (obj(fields), line)
+    def fits(line: String): Boolean =
+      line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <=
+        headlineBytes
+    // the line grows with each entry listed: the re-timings that explain
+    // a contaminated sweep first, then the failed names, each list the
+    // longest that fits
+    val nReadj = (readj.size to 0 by -1).find(m => fits(headline(0, m)))
+      .getOrElse(0)
+    val nFailed = (failed.size to 0 by -1)
+      .find(n => fits(headline(n, nReadj))).getOrElse(0)
+    (obj(fields), headline(nFailed, nReadj))
   }
 
   /** How many of the slowest queries to re-time when the canary trips:

@@ -2,7 +2,7 @@ package graft
 
 import graft.ddl.DdlGenerator
 import graft.diff.SchemaDiff
-import graft.inference.TypeInference
+import graft.inference.{ParquetFooters, TypeInference}
 import graft.inference.TypeInference.ColumnMeta
 import scala.util.Try
 
@@ -35,9 +35,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     the diff is cached as its collected rows, not as a plan.
   *   - Work sized by the column count runs on the driver, like the
   *     reference's pandas steps (RAS:82-91, RAS:202-225): a delimited
-  *     file's header line and the proposed ⟗ deployed diff. Neither
-  *     grows with the data, so this holds at any data size; the type
-  *     inference scan is the only data-sized Spark work of the flow.
+  *     file's header line, a parquet file's footer schema and the
+  *     proposed ⟗ deployed diff. None of them grows with the data, so
+  *     this holds at any data size; the type inference scan is the only
+  *     data-sized Spark work of the flow.
   */
 final class RedshiftAutoSchema(
     spark: SparkSession,
@@ -76,7 +77,7 @@ final class RedshiftAutoSchema(
   private lazy val loaded: DataFrame = {
     val raw = fileDf.getOrElse {
       val path = file.get
-      if (path.toLowerCase.endsWith(".parquet")) spark.read.parquet(path)
+      if (path.toLowerCase.endsWith(".parquet")) ParquetFooters.read(spark, path)
       else if (path.toLowerCase.endsWith(".json") ||
                path.toLowerCase.endsWith(".jsonl"))
         spark.read.option("primitivesAsString", "true").json(path)
@@ -145,8 +146,9 @@ final class RedshiftAutoSchema(
     else TypeInference.inferSchema(loaded)
 
   /** A1: file header (RAS:82-91) — schema-only read, no data scan; for
-    * one delimited file the header line is read on the driver, so no
-    * Spark job runs ([[csvHeaderSchema]]). */
+    * one delimited file the header line ([[csvHeaderSchema]]), for one
+    * parquet file the footer (`ParquetFooters.read`) is read on the
+    * driver, so no Spark job runs. */
   def getColumnList: Seq[String] = loaded.columns.toSeq
 
   /** A2: schema existence (RAS:93-107 pg_namespace probe) — against the

@@ -8,7 +8,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -83,6 +83,13 @@ object ParquetFooters {
       st.filter(s => s.isFile && s.getLen > 0 && !hidden(s.getPath)).map(s =>
         GraftParquetBridge.sparkSchema(spark, s.getPath, readFooter(conf, s)))
     }
+
+  /** `spark.read.parquet(path)` without Spark's footer-merge job when
+    * `path` is one regular file: the reader takes [[fileSchema]]. A
+    * directory or a glob keeps Spark's read. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    fileSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** A data file's path as `_metadata.file_path` and the listing both
     * name it: scheme and authority dropped, since one spells the local

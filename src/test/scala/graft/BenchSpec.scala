@@ -54,6 +54,16 @@ class BenchSpec extends AnyFunSuite {
       assert(line.contains("\"" + k + "\":"), s"headline lacks $k: $line")
     assert(readj.forall(r => line.contains("\"" + r._1 + "\":{")), line)
     assert(names.forall(n => durable.contains("\"" + n + "\":-1.0")))
+    // every query also readjudicated: that list is capped too, and the
+    // durable record keeps every entry
+    val allReadj = names.map(n => (n, 12345.678, 12345.678))
+    val (durableAll, lineAll) = report(names.map(_ -> -1.0), allReadj)
+    val bytesAll = lineAll.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+    assert(bytesAll <= 1500, s"$bytesAll bytes: $lineAll")
+    assert(lineAll.contains("\"n_readjudicated\":323"), lineAll)
+    assert(lineAll.contains("\"" + names.head + "\":{"), lineAll)
+    assert(allReadj.forall(r =>
+      durableAll.contains("\"" + r._1 + "\":{\"sweep\"")), durableAll)
   }
 
   test("report: the durable record holds every query's seconds") {

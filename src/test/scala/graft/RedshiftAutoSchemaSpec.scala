@@ -268,4 +268,15 @@ class RedshiftAutoSchemaSpec extends SparkSpec {
       else assert(fileJobs == dirJobs, s"$label: falls back to the inferring read")
     }
   }
+
+  test("parquet file: footer schema on the driver, same columns and DDL as Spark's read") {
+    val p = "/root/testdata/sf0.001/lineitem.parquet"
+    val byFile = new RedshiftAutoSchema(spark, "s", "t", file = Some(p))
+    val byDf = new RedshiftAutoSchema(spark, "s", "t",
+      fileDf = Some(spark.read.parquet(p)))
+    val (cols, jobs) = countJobs(byFile.getColumnList)
+    assert(jobs == 0, s"the parquet load ran $jobs jobs")
+    assert(cols == byDf.getColumnList)
+    assert(byFile.generateTableDdl() == byDf.generateTableDdl())
+  }
 }
