@@ -217,7 +217,8 @@ object ColumnProfiler {
     * non-cheap aliases in place, so the projection survives
     * optimization. It fuses with the aggregate in one codegen stage only
     * while the aggregate has at most `spark.sql.codegen.maxFields` (100)
-    * fields: always on the melted path, up to 9 columns on the wide one. */
+    * fields: always on the melted path, up to 9 columns on the wide one
+    * (8 when keyed). */
   private def viewsFor(i: Int, name: String, dt: DataType): Seq[Column] = {
     val kind = kindOf(dt)
     val raw = col(quote(name)) // backtick-quoted: names may contain any char
@@ -467,7 +468,8 @@ object ColumnProfiler {
     * and typed frames profile here. Each job's scan prunes to exactly
     * its chunk's columns (columnar Parquet), so chunking very wide
     * tables costs no extra total I/O. Above `spark.sql.codegen.maxFields`
-    * (100) output fields — past 9 columns — the aggregate runs outside
+    * (100) output fields — 11 per column plus `p_rows` and the key: past
+    * 9 columns, past 8 with a key — the aggregate runs outside
     * whole-stage codegen (interpreted `TungstenAggregationIterator`),
     * so the per-column expression set costs both planning and
     * execution time as the width grows. */

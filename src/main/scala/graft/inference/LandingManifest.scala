@@ -1,6 +1,21 @@
 package graft.inference
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.IOException
+import java.util.UUID
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.SPARK_VERSION_SHORT
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Incremental landing-zone manifest: persist the per-file
@@ -17,12 +32,18 @@ import org.apache.spark.sql.types._
   * TYPE DRIFT, notype = no evidence) is identical to re-profiling the
   * whole directory, at the scan cost of only the new files.
   *
+  * The manifest is schema-sized, so [[write]] and [[read]] do its
+  * parquet I/O on the driver with parquet-mr and run no Spark job: the
+  * scan of the newcomers in [[driftSince]] is an arrival's only Spark
+  * work.
+  *
   * 100 TB shape: a year-old landing zone re-profiles nothing; each
   * incremental run reads only the day's arrivals (footer fast path
-  * included), and the manifest grows by a few rows per file. */
+  * included), and the manifest grows by a few rows per file. One
+  * writer on the driver is what Spark's `coalesce(1)` write was too. */
 object LandingManifest {
 
-  /** Manifest frame schema (stable, versionable). `ordinal` preserves
+  /** Manifest schema (stable, versionable). `ordinal` preserves
     * per-file column order; `source_type` is the Spark DDL string
     * (round-trips via DataType.fromDDL). */
   val manifestSchema: StructType = StructType(Seq(
@@ -44,57 +65,108 @@ object LandingManifest {
     StructField("complex", BooleanType, nullable = false),
     StructField("big_obj_count", LongType, nullable = false)))
 
-  /** Entries → manifest frame (local relation; no Spark job until an
-    * action). */
-  def toFrame(spark: SparkSession,
-              entries: Seq[(String, Seq[ColumnProfile])]): DataFrame = {
-    val rows = for {
-      (file, ps) <- entries
-      (p, i) <- ps.zipWithIndex
-    } yield Row(file, i, p.field, p.sourceType.sql, p.identifier,
-      p.nonNull, p.boolDomain, p.numericCount, p.intCount, p.integral,
-      p.minD.orNull, p.maxD.orNull, p.tsCount, p.allMidnight,
-      p.maxLen.orNull, p.complex, p.bigObjCount)
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava), manifestSchema)
+  /** Persist a manifest, replacing any earlier one: a directory at
+    * `manifestPath` holding one `part-*.parquet` file and a `_SUCCESS`
+    * marker, the layout Spark's `coalesce(1).write` gives, Spark's
+    * schema metadata included. Written on the driver with parquet-mr,
+    * so no Spark job runs. The parquet schema is Spark's conversion of
+    * [[manifestSchema]] and the codec `spark.sql.parquet.compression.codec`,
+    * both under the active session's conf. The file is staged in a
+    * hidden sibling directory and renamed into place, so a crashed run
+    * leaves the old manifest or none, never a half-written one. */
+  def write(spark: SparkSession, manifestPath: String,
+            entries: Seq[(String, Seq[ColumnProfile])]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dest = new Path(manifestPath)
+    val fs = dest.getFileSystem(conf)
+    val target = fs.makeQualified(dest)
+    val stage = new Path(target.getParent, s".${target.getName}-${UUID.randomUUID()}")
+    val sqlConf = SQLConf.get
+    val schema = new SparkToParquetSchemaConverter(sqlConf).convert(manifestSchema)
+    val codec = CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName)
+    val part = new Path(stage,
+      s"part-00000-${UUID.randomUUID()}-c000${codec.getExtension}.parquet")
+    try {
+      val w = ExampleParquetWriter.builder(part).withConf(conf).withType(schema)
+        .withCompressionCodec(codec)
+        .withExtraMetaData(Map(
+          "org.apache.spark.version" -> SPARK_VERSION_SHORT,
+          "org.apache.spark.sql.parquet.row.metadata" -> manifestSchema.json).asJava)
+        .build()
+      try {
+        val rows = new SimpleGroupFactory(schema)
+        for ((file, ps) <- entries; (p, i) <- ps.zipWithIndex) {
+          val g = rows.newGroup()
+          g.add("file", file)
+          g.add("ordinal", i)
+          g.add("field", p.field)
+          g.add("source_type", p.sourceType.sql)
+          g.add("identifier", p.identifier)
+          g.add("non_null", p.nonNull)
+          g.add("bool_domain", p.boolDomain)
+          g.add("numeric_count", p.numericCount)
+          g.add("int_count", p.intCount)
+          g.add("integral", p.integral)
+          p.minD.foreach(g.add("min_d", _)) // None: no value, null
+          p.maxD.foreach(g.add("max_d", _))
+          g.add("ts_count", p.tsCount)
+          g.add("all_midnight", p.allMidnight)
+          p.maxLen.foreach(g.add("max_len", _))
+          g.add("complex", p.complex)
+          g.add("big_obj_count", p.bigObjCount)
+          w.write(g)
+        }
+      } finally w.close()
+      fs.create(new Path(stage, "_SUCCESS")).close()
+      fs.delete(target, true)
+      if (!fs.rename(stage, target))
+        throw new IOException(s"could not move $stage to $target")
+    } finally fs.delete(stage, true)
   }
 
-  /** Persist a manifest (overwrite — the manifest is tiny; callers
-    * snapshot-and-replace rather than append, so a crashed run can
-    * never leave a half-written generation). */
-  def write(spark: SparkSession, manifestPath: String,
-            entries: Seq[(String, Seq[ColumnProfile])]): Unit =
-    toFrame(spark, entries).coalesce(1)
-      .write.mode("overwrite").parquet(manifestPath)
-
-  /** Load a manifest back into per-file profile entries. File order is
-    * name-sorted (deterministic regardless of write layout); per-file
-    * column order is the stored ordinal. */
+  /** Load a manifest back into per-file profile entries, reading its
+    * visible data files on the driver under the session's Hadoop conf
+    * (no Spark job); a manifest of several part files, as Spark's writer
+    * leaves, reads the same. File order is name-sorted (deterministic
+    * regardless of write layout); per-file column order is the stored
+    * ordinal. */
   def read(spark: SparkSession, manifestPath: String)
       : Seq[(String, Seq[ColumnProfile])] = {
-    val rows = spark.read.schema(manifestSchema).parquet(manifestPath)
-      .collect()
-    rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (f, rs) =>
-      f -> rs.sortBy(_.getInt(1)).toSeq.map { r =>
-        def optD(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-        def optL(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(manifestPath)
+    val files = dir.getFileSystem(conf).listStatus(dir).toSeq
+      .filter(s => s.isFile && !ParquetFooters.hidden(s.getPath))
+    val rows = files.flatMap { f =>
+      val reader = new ParquetReader.Builder[Group](
+          HadoopInputFile.fromStatus(f, conf)) {
+        override protected def getReadSupport = new GroupReadSupport
+      }.build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => (g.getString("file", 0), g.getInteger("ordinal", 0), g))
+        .toVector
+      finally reader.close()
+    }
+    rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, rs) =>
+      f -> rs.sortBy(_._2).map { case (_, _, g) =>
+        def opt[A](n: String)(get: (String, Int) => A) =
+          if (g.getFieldRepetitionCount(n) == 0) None else Some(get(n, 0))
         ColumnProfile(
-          field = r.getString(2),
-          sourceType = DataType.fromDDL(r.getString(3)),
-          identifier = r.getBoolean(4),
-          nonNull = r.getLong(5),
-          boolDomain = r.getBoolean(6),
-          numericCount = r.getLong(7),
-          intCount = r.getLong(8),
-          integral = r.getBoolean(9),
-          minD = optD(10),
-          maxD = optD(11),
-          tsCount = r.getLong(12),
-          allMidnight = r.getBoolean(13),
-          maxLen = optL(14),
-          complex = r.getBoolean(15),
-          bigObjCount = r.getLong(16))
+          field = g.getString("field", 0),
+          sourceType = DataType.fromDDL(g.getString("source_type", 0)),
+          identifier = g.getBoolean("identifier", 0),
+          nonNull = g.getLong("non_null", 0),
+          boolDomain = g.getBoolean("bool_domain", 0),
+          numericCount = g.getLong("numeric_count", 0),
+          intCount = g.getLong("int_count", 0),
+          integral = g.getBoolean("integral", 0),
+          minD = opt("min_d")(g.getDouble),
+          maxD = opt("max_d")(g.getDouble),
+          tsCount = g.getLong("ts_count", 0),
+          allMidnight = g.getBoolean("all_midnight", 0),
+          maxLen = opt("max_len")(g.getLong),
+          complex = g.getBoolean("complex", 0),
+          bigObjCount = g.getLong("big_obj_count", 0))
       }
     }
   }

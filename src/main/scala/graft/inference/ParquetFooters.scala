@@ -4,12 +4,12 @@ import java.io.FileNotFoundException
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetBridge, ParquetFooterReader}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -54,12 +54,15 @@ object ParquetFooters {
   private[inference] def hidden(p: Path): Boolean =
     p.getName.startsWith("_") || p.getName.startsWith(".")
 
-  /** One data file's footer, row groups and statistics included. */
+  /** One data file's footer, row groups and statistics included, read
+    * with Spark's own footer reader under `conf`. (`ParquetFileReader.open`
+    * on an input file builds its read options from a fresh Hadoop
+    * `Configuration`, which parses the core-site resources again for
+    * every footer.) */
   private[inference] def readFooter(conf: Configuration,
-                                    f: FileStatus): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-    try r.getFooter finally r.close()
-  }
+                                    f: FileStatus): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+      ParquetMetadataConverter.NO_FILTER)
 
   /** The visible children of `dir`, name-sorted: each is one landed
     * file, or a directory holding one Spark write. */

@@ -4,7 +4,9 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.crypto.{DecryptionPropertiesFactory, FileDecryptionProperties}
 import org.apache.spark.sql.DataFrame
 
 /** One footer read per data file: the footer schema equals Spark's
@@ -140,4 +142,34 @@ class ParquetFootersSpec extends SparkSpec {
     assert(names.count(_.startsWith("Listing leaf files")) == 1, names.mkString(", "))
     assert(!names.exists(_.startsWith("parquet at")), names.mkString(", "))
   }
+
+  test("a footer is read under the session's Hadoop conf") {
+    // the decryption factory is loaded from the conf the reader is given;
+    // a footer read that builds its own fresh conf never sees it
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = DecryptionPropertiesFactory.CRYPTO_FACTORY_CLASS_PROPERTY_NAME
+    val dir = fresh("conf")
+    plainFile(Seq((1L, "a")).toDF("k", "s"), dir, "one.parquet")
+    val p = new File(dir, "one.parquet").getPath
+    conf.set(key, classOf[CountingDecryptionFactory].getName)
+    try {
+      CountingDecryptionFactory.calls.set(0)
+      assert(ParquetFooters.fileSchema(spark, p).isDefined)
+      assert(CountingDecryptionFactory.calls.get == 1)
+    } finally conf.unset(key)
+  }
+}
+
+/** Counts the footer reads that consult the configured decryption
+  * factory; returns no decryption properties (plaintext files). */
+class CountingDecryptionFactory extends DecryptionPropertiesFactory {
+  override def getFileDecryptionProperties(hadoopConfig: Configuration,
+                                           filePath: Path): FileDecryptionProperties = {
+    CountingDecryptionFactory.calls.incrementAndGet()
+    null
+  }
+}
+
+object CountingDecryptionFactory {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }
