@@ -1,5 +1,6 @@
 package graft.inference
 
+import graft.functions.DatetimeExpressions
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,11 +94,17 @@ object ColumnProfiler {
     * (month-first and day-first, with and without time); exotic
     * dateutil-only spellings beyond these demote to varchar — documented
     * divergence, see TypeInference's scaladoc.
-    * Order: most specific first (try_to_timestamp requires a full match).
+    * Order: most specific first (each format must match the whole
+    * value, and the first that parses it wins). Only date-shaped values
+    * are parsed at all ([[graft.functions.DateShapes.dateShaped]]: keep
+    * it in sync), and each format only where its shape admits the
+    * value: a format whose pattern has no shape rule fails the first
+    * inference query ([[graft.functions.DateShapes.shapeOf]]).
     * LOCKSTEP CONTRACT: every entry here has a try_strptime twin in
     * InferenceOracle.tsParse (same acceptance set, same order), and the
-    * guarded default-parse fallback in [[tsExpr]] is mirrored there by
-    * explicit %z/offset entries — edit both files together.
+    * guarded ISO fallback of [[graft.functions.ShapedTimestamp]] is
+    * mirrored there by explicit %z/offset entries — edit both files
+    * together.
     */
   val sparkTsFormats: Seq[String] = Seq(
     "yyyy-MM-dd HH:mm:ss.SSSSSS",
@@ -158,30 +165,15 @@ object ColumnProfiler {
 
   private def quote(name: String): String = "`" + name.replace("`", "``") + "`"
 
-  /** Superset pre-filter for [[sparkTsFormats]]: any string a format (or
-    * the ISO fallback) could accept matches this regex. The guard exists
-    * for THROUGHPUT, not semantics — try_to_timestamp failure is
-    * exception-driven (~µs per miss), so without it a 100 TB string
-    * column pays |formats| exceptions per value; with it, non-date-shaped
-    * strings short-circuit on a codegen'd regex. Keep in sync with
-    * sparkTsFormats. */
-  private val dateShaped =
-    "^(\\d{4}[-/.]\\d{1,2}[-/.]\\d{1,2}|\\d{2}/\\d{2}/\\d{4}|[A-Za-z]{3,9} \\d{1,2},? \\d{4}|\\d{1,2} [A-Za-z]{3,9} \\d{4})"
-
-  /** The datetime view: identity for timestamp/date sources, the strict
-    * multi-format parse chain for strings. */
+  /** The datetime view: identity for timestamp/date sources; for
+    * date-shaped strings, the first of [[sparkTsFormats]] that parses
+    * the value, else the ISO fallback for values that start
+    * `yyyy-MM-dd` ([[graft.functions.ShapedTimestamp]], which tries only
+    * the formats a value's shape admits). */
   private def tsExpr(c: Column, kind: Kind): Column = kind match {
     case TsKind   => c
     case DateKind => c.cast(TimestampType)
-    case StrKind  =>
-      // Explicit format list first; a guarded default-parse fallback
-      // (ISO-8601 with offset/zone/'T'/fractional variants) covers the
-      // long tail — guarded by a date-shaped prefix so partial values
-      // like "March" or "12:30" can never sneak through it.
-      when(c.rlike(dateShaped),
-        coalesce(
-          (sparkTsFormats.map(f => try_to_timestamp(c, lit(f))) :+
-            when(c.rlike("^\\d{4}-\\d{2}-\\d{2}"), try_to_timestamp(c))): _*))
+    case StrKind  => DatetimeExpressions.shapedTimestamp(c, sparkTsFormats)
     case _        => lit(null).cast(TimestampType)
   }
 
@@ -211,7 +203,7 @@ object ColumnProfiler {
     * projection under the aggregate. Catalyst does not share subtrees
     * ACROSS aggregate expressions, so referencing these from [[aggsFor]]
     * by name (instead of inlining the trees) is what keeps the guarded
-    * numeric cast and the datetime chain at one evaluation per row —
+    * numeric cast and the datetime view at one evaluation per row —
     * inlined, the guard regex ran ~8× per string value and full-table
     * inference measured ~1.7× slower. CollapseProject leaves multi-use
     * non-cheap aliases in place, so the projection survives
@@ -231,13 +223,16 @@ object ColumnProfiler {
       case BoolKind =>
         (raw, raw.cast(DoubleType), raw.cast(DoubleType))
       case StrKind =>
-        // Guard the exception-driven parse with a cheap superset regex:
+        // Guard the exception-driven parse with cheap superset tests:
         // anything double-castable contains a digit or an inf/nan
-        // spelling, so guarded-out values are exactly the unparseable
-        // ones (same nulls, ~µs exception per miss avoided; measured
-        // 2.0 s/1.2M unparseable values unguarded vs 0.26 s guarded).
-        val tc = when(raw.rlike("[0-9]|(?i:inf)|(?i:nan)"),
-          expr(s"try_cast(${quote(name)} AS DOUBLE)"))
+        // spelling and is not date-shaped, so guarded-out values are
+        // exactly the unparseable ones (same nulls, ~µs exception per
+        // miss avoided; measured 2.0 s/1.2M unparseable values
+        // unguarded vs 0.26 s guarded). The date-shaped test runs first:
+        // it fails within a few bytes on most other strings.
+        val tc = when(!DatetimeExpressions.dateShaped(raw) &&
+            raw.rlike("[0-9]|(?i:inf)|(?i:nan)"),
+          raw.try_cast(DoubleType))
         (raw, tc, when(!isnan(tc), tc))
       case _ =>
         (raw, lit(null).cast(DoubleType), lit(null).cast(DoubleType))
@@ -302,21 +297,22 @@ object ColumnProfiler {
     // parse below are per-value costs that measured 2.5× on full-table
     // inference when run unconditionally (q02 1.7 s → 4.4 s) — the
     // `when` guards keep them off the codegen hot path, executing only
-    // for the vanishingly rare magnitudes at/beyond 2⁵³ (and
-    // non-double-castable giants, where d is null/Infinity and the
-    // guard also falls through to the exact branch).
+    // for the vanishingly rare magnitudes at/beyond 2⁵³ (giants whose
+    // d is Infinity included). A value that is not numeric (d null)
+    // skips them too: an integer literal is never date-shaped and always
+    // double-castable, so there `intLit` is false and the result null.
     val twoTo53 = lit(9.007199254740992e15)
     val intLit: Column =
       if (kind == StrKind) c.rlike("^\\s*[+-]?[0-9]+\\s*$") else lit(false)
     val decOfStr: Column =
-      if (kind == StrKind) expr(s"try_cast(v${i}_c AS DECIMAL(38,0))")
+      if (kind == StrKind) c.try_cast(DecimalType(38, 0))
       else lit(null).cast(DecimalType(38, 0))
     val finiteIntegral = kind match {
       case StrKind =>
         val inInt64 = decOfStr.isNotNull &&
           decOfStr >= lit(Long.MinValue) && decOfStr <= lit(Long.MaxValue)
         when(abs(d) < twoTo53, d === floor(d))
-          .otherwise(when(intLit, inInt64).otherwise(floatIntegral))
+          .when(d.isNotNull, when(intLit, inInt64).otherwise(floatIntegral))
       case NumKind => dt match {
         case FloatType | DoubleType => floatIntegral
         // integral/decimal sources: conversion is exact, no clamp
@@ -333,7 +329,7 @@ object ColumnProfiler {
     // so bigObj is statically false on the hot path.
     val bigObj: Column =
       if (kind != StrKind) lit(false)
-      else when(abs(d) < twoTo53, lit(false))
+      else when(d.isNull || abs(d) < twoTo53, lit(false))
         .otherwise(intLit && !(decOfStr.isNotNull &&
           decOfStr >= lit(Long.MinValue) &&
           decOfStr <= lit(new java.math.BigDecimal("18446744073709551615"))))
@@ -502,9 +498,9 @@ object ColumnProfiler {
   /** All-string frames: melt to a (pos, x) stream with
     * `posexplode(array(cols))` and aggregate `groupBy(pos)` over ONE
     * set of string views and aggregates for `x`. The expression set —
-    * regex guards, try_casts and the |sparkTsFormats|-format datetime
-    * chain — is planned and compiled once per call instead of once per
-    * column, and the aggregate (pos + 12 fields) stays inside
+    * regex guards, try_casts and the datetime view — is planned and
+    * compiled once per call instead of once per column, and the
+    * aggregate (pos + 12 fields) stays inside
     * whole-stage codegen at any width. Still one aggregation per call:
     * the partial aggregate holds `width` groups per task, so only
     * `width` stats rows per task cross the shuffle, never raw rows.

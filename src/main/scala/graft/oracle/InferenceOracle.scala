@@ -27,10 +27,11 @@ object InferenceOracle {
     * with Spark on the strings actually present; every format requires
     * explicit Y+M+D (partial dates fall through).
     * LOCKSTEP CONTRACT (twin of ColumnProfiler.sparkTsFormats): the
-    * trailing %z entries mirror ColumnProfiler.tsExpr's guarded
-    * default-parse fallback (ISO forms with a zone offset, space- or
-    * 'T'-separated), so a string column of offset timestamps infers
-    * `timestamp` on BOTH sides — edit both files together. */
+    * trailing %z entries mirror the guarded ISO fallback of
+    * graft.functions.ShapedTimestamp, the profiler's datetime view (ISO
+    * forms with a zone offset, space- or 'T'-separated), so a string
+    * column of offset timestamps infers `timestamp` on BOTH sides —
+    * edit both files together. */
   private def tsParse(c: String): String = {
     val fmts = Seq(
       "%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S",
@@ -45,7 +46,7 @@ object InferenceOracle {
       "%b %d %Y", "%b %d, %Y", "%B %d %Y", "%B %d, %Y",
       "%d %b %Y %H:%M:%S", "%d %B %Y %H:%M:%S",
       "%d %b %Y", "%d %B %Y",
-      // tsExpr's default-parse fallback, made explicit:
+      // ShapedTimestamp's ISO fallback, made explicit:
       "%Y-%m-%d %H:%M:%S%z", "%Y-%m-%d %H:%M:%S.%f%z")
     fmts.map(f => s"try_strptime($c, '$f')").mkString("coalesce(", ", ", ")")
   }
