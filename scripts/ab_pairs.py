@@ -11,10 +11,21 @@ line of each run's stdout. It then prints, per workload and metric, the
 median and quartiles of each side, the pairs the change won, and
 whether the gain rule holds: the change is better in at least nine of
 ten pairs, and its median is better than the parent's by more than the
-parent's interquartile range. A metric's better direction comes from
-BENCHMARK.json in the change checkout. The first run in a checkout also
-builds it. Nothing under perfbench/ is written here; run.py writes its
-build under each checkout's .bench_build/.
+parent's interquartile range. Each end-to-end metric with a `bound`
+also gets the no-regression state a no-gain change is judged on:
+
+    ok          the change's median is no worse than the parent's by
+                more than bound × the parent's median
+    unresolved  the parent's IQR / median exceeds the bound (the runs
+                spread too widely to tell), unless every change run is
+                better than every parent run
+    worse       otherwise
+
+A metric's better direction and bound come from BENCHMARK.json in the
+change checkout. The same checkout may be passed twice (an A/A control).
+The first run in a checkout also builds it. Nothing under perfbench/ is
+written here; run.py writes its build under each checkout's
+.bench_build/.
 """
 import argparse
 import json
@@ -59,7 +70,22 @@ def value(run: dict, metric: str) -> float:
     return v["value"] if isinstance(v, dict) else v
 
 
-def summarize(pairs: list, better: dict) -> list:
+def ratio(x: float, base: float) -> float:
+    return x / abs(base) if base else (0.0 if x == 0 else math.inf)
+
+
+def no_regression(a: list, b: list, sign: int, bound: float) -> str:
+    """The state of change runs `b` against parent runs `a` (module
+    docstring); `sign` is 1 when lower is better."""
+    qa, qb = quartiles(a), quartiles(b)
+    if ratio(qa[2] - qa[0], qa[1]) > bound:
+        dominates = all(sign * (x - y) > 0 for x in a for y in b)
+        return "ok" if dominates else "unresolved"
+    return "ok" if ratio(sign * (qb[1] - qa[1]), qa[1]) <= bound \
+        else "worse"
+
+
+def summarize(pairs: list, better: dict, bounds: dict) -> list:
     """One row per metric present in every run of both sides."""
     names = set.intersection(*(set(a["metrics"]) & set(b["metrics"])
                                for a, b in pairs))
@@ -73,8 +99,11 @@ def summarize(pairs: list, better: dict) -> list:
         gap = sign * (qa[1] - qb[1])
         holds = (wins >= math.ceil(0.9 * len(pairs))
                  and gap > qa[2] - qa[0])
+        state = (no_regression(a, b, sign, bounds[m]) if m in bounds
+                 else None)
         rows.append({"metric": m, "parent": qa, "change": qb,
-                     "wins": wins, "pairs": len(pairs), "rule": holds})
+                     "wins": wins, "pairs": len(pairs), "rule": holds,
+                     "no_regression": state})
     return rows
 
 
@@ -92,20 +121,23 @@ def main():
     bench = json.loads((a.change / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"]
               for m in bench["end_to_end"] + bench["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]
+              if "bound" in m}
     report = {}
     for w in a.workloads.split(","):
         pairs = []
         for seed in seeds_of(a.seeds):
-            order = [a.parent, a.change] if seed % 2 == 0 \
-                else [a.change, a.parent]
-            res = {side: run(side, w, seed, a.seconds, a.trace)
+            sides = {"parent": a.parent, "change": a.change}
+            order = ["parent", "change"] if seed % 2 == 0 \
+                else ["change", "parent"]
+            res = {side: run(sides[side], w, seed, a.seconds, a.trace)
                    for side in order}
-            pairs.append((res[a.parent], res[a.change]))
+            pairs.append((res["parent"], res["change"]))
             wrong = [s for s, r in res.items() if not r.get("correct")]
             if wrong:
                 print(f"{w} seed {seed}: incorrect results in "
-                      f"{', '.join(map(str, wrong))}", file=sys.stderr)
-        rows = summarize(pairs, better)
+                      f"{', '.join(wrong)}", file=sys.stderr)
+        rows = summarize(pairs, better, bounds)
         report[w] = {"seeds": seeds_of(a.seeds), "summary": rows,
                      "runs": [{"parent": p, "change": c} for p, c in pairs]}
         print(f"== {w} ({len(pairs)} pairs; median [q1, q3])")
@@ -114,7 +146,9 @@ def main():
             print(f"{r['metric']:28s} parent {pa[1]:10.4g} "
                   f"[{pa[0]:.4g}, {pa[2]:.4g}]  change {ch[1]:10.4g} "
                   f"[{ch[0]:.4g}, {ch[2]:.4g}]  wins {r['wins']}/"
-                  f"{r['pairs']}  rule {'holds' if r['rule'] else 'fails'}")
+                  f"{r['pairs']}  rule {'holds' if r['rule'] else 'fails'}"
+                  + (f"  {r['no_regression']}" if r["no_regression"]
+                     else ""))
     if a.json:
         a.json.write_text(json.dumps(report, indent=1))
 

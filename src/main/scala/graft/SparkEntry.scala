@@ -444,9 +444,9 @@ ORDER BY media_id, frame_idx"""),
         .withColumn("cos", round(col("cos"), 4))
         .orderBy("id_a", "id_b")
     }, srpNearDupOracle),
-    // ---- sessionization (batch twin of StreamingOps.sessionize) ----
+    // ---- gap sessionization (TemporalJoins.sessionizeBatch) ----
     Q("q28_sessionize", (s, dir) => {
-      graft.streaming.StreamingOps.sessionizeBatch(
+      TemporalJoins.sessionizeBatch(
         t(s, dir, "events").select("user_id", "ts"), gapMinutes = 30)
         .orderBy("user_id", "session_start")
     },

@@ -38,10 +38,10 @@ final case class ColumnProfile(
                               // (live-verified; see aggsFor)
 ) {
   /** Merge with another profile of the same column (e.g. a later
-    * micro-batch). Every statistic is a semigroup (sums, ANDs,
-    * min/max), so merged inference ≡ inference over the union —
-    * the basis of incremental/streaming schema inference and of
-    * scale-out profile aggregation. */
+    * file of a landing directory). Every statistic is a semigroup
+    * (sums, ANDs, min/max), so merged inference ≡ inference over the
+    * union — the basis of DirectoryDrift's corpus profiles and
+    * of scale-out profile aggregation. */
   def merge(o: ColumnProfile): ColumnProfile = {
     require(field == o.field, s"cannot merge $field with ${o.field}")
     def mo(f: (Double, Double) => Double)(a: Option[Double],
@@ -354,10 +354,10 @@ object ColumnProfiler {
     * A frame of two or more columns, all strings, is melted by
     * [[profileMelted]]: the string views and aggregates exist once,
     * whatever the column count, so it runs in one job at any width.
-    * Such frames are the facade's delimited and JSON loads, the string
-    * remainder [[profileParquetWithCount]] scans once the footers decide
-    * the numeric columns, and all-string streaming micro-batches. Any
-    * other frame runs [[profileWide]] in `ceil(cols / 256)` jobs.
+    * Such frames are the facade's delimited and JSON loads and the
+    * string remainder [[profileParquetWithCount]] scans once the
+    * footers decide the numeric columns. Any other frame runs
+    * [[profileWide]] in `ceil(cols / 256)` jobs.
     * Either way the aggregate is associative+commutative → map-side
     * partial aggregation, no shuffle of raw rows; only stats rows reach
     * the driver.

@@ -259,14 +259,6 @@ object Multimodal {
         expr(s"substring(payload, frame_idx * $frameBytes + 1, $frameBytes)")
           .as("frame_bytes"))
 
-  /** Resize stub: deterministic downsample marker — keeps every k-th byte
-    * (stand-in for image resize; the partitioning/schema story is what's
-    * exercised). */
-  def resizeStub(media: DataFrame, factor: Int): DataFrame =
-    media.withColumn("payload_resized",
-      unhex(regexp_replace(hex(col("payload")),
-        s"(..)" + ("(..)" * (factor - 1)), "$1")))
-
   /** 64-bit dHash (difference hash — the classic perceptual image
     * fingerprint) over an 8-row × 9-column grayscale thumbnail stored
     * as a 72-byte binary column: bit i (= row j·8 + col c) is set iff

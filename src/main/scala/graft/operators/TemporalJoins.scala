@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *   - [[bandedRangeJoin]]: a key with k× the rows spreads over its
   *     bands — per-task work is bounded by rows-per-(key, band)², not
   *     rows-per-key², so a hot user dilutes across time.
-  *   - [[asOf]] (and q28's StreamingOps.sessionizeBatch, which shares
-  *     the shape): partitioned by the bare key, so one hot key is one
+  *   - [[asOf]] (and q28's [[sessionizeBatch]], which shares the
+  *     shape): partitioned by the bare key, so one hot key is one
   *     sorted task — O(n log n) in that key's rows, never n². If a
   *     single key outgrows an executor, [[asOfSalted]] pre-splits by
   *     a time-range salt and runs the same window per (key, slice)
@@ -69,6 +69,30 @@ object TemporalJoins {
     }
     out.filter(col("_side") === 1)
       .drop("_side", "_tb", "_payload", "_match")
+  }
+
+  /** Gap sessionization (q28): a user's session closes when more than
+    * `gapMinutes` pass between consecutive events — the classic
+    * gap-window via lag + cumulative session ids. */
+  def sessionizeBatch(events: DataFrame, gapMinutes: Int): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts")
+    // microseconds, like the q28 oracle's epoch_us — unix_millis would
+    // truncate sub-ms gap components and disagree exactly at the gap
+    // boundary
+    val gapUs = gapMinutes * 60000000L
+    events
+      .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+      .withColumn("new_session",
+        (col("prev_ts").isNull ||
+          (unix_micros(col("ts")) - unix_micros(col("prev_ts"))) > gapUs)
+          .cast("int"))
+      .withColumn("session_id",
+        sum(col("new_session")).over(byUser.rowsBetween(
+          Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("user_id", "session_id")
+      .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
+        count(lit(1)).cast("int").as("n_events"))
+      .drop("session_id")
   }
 
   /** Salted as-of join — the documented hot-key escape hatch for

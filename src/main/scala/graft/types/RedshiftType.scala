@@ -60,23 +60,6 @@ object RedshiftType {
     case "super"          => Super
     case other => sys.error(s"not a reference-inferable type: $other")
   }
-
-  /** Spark DataType mapping for round-trip materialization
-    * (SURVEY.md §1 type table). */
-  def toSpark(t: RedshiftType): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    t match {
-      case NoType     => StringType // DDL substitution target
-      case Bool       => BooleanType
-      case Int4       => IntegerType
-      case Int8       => LongType
-      case Float8     => DoubleType
-      case Date       => DateType
-      case Timestamp  => TimestampType
-      case Varchar(_) => StringType
-      case Super      => StringType // serialized JSON round-trip form
-    }
-  }
 }
 
 /** Type-alias equivalence classes used by the schema-diff comparator.

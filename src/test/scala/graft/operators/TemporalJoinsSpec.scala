@@ -304,6 +304,26 @@ class TemporalJoinsSpec extends SparkSpec {
     assert(naiveAsof.except(a).count() == 0)
   }
 
+  test("sessionizeBatch splits a user's events where the gap exceeds gapMinutes") {
+    import spark.implicits._
+    val events = Seq(
+      (1L, ts("2024-01-01 00:00:00")),
+      (1L, ts("2024-01-01 00:10:00")),
+      (1L, ts("2024-01-01 00:40:00")),        // exactly the gap: same session
+      (1L, ts("2024-01-01 01:10:00.000001")), // gap + 1 µs: new session
+      (2L, ts("2024-01-01 00:05:00"))
+    ).toDF("user_id", "ts")
+    val got = TemporalJoins.sessionizeBatch(events, gapMinutes = 30)
+      .select("user_id", "session_start", "session_end", "n_events")
+      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Int)]
+      .collect().toSet
+    assert(got == Set(
+      (1L, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:40:00"), 3),
+      (1L, ts("2024-01-01 01:10:00.000001"),
+        ts("2024-01-01 01:10:00.000001"), 1),
+      (2L, ts("2024-01-01 00:05:00"), ts("2024-01-01 00:05:00"), 1)))
+  }
+
   test("scd2Collapse merges state runs into validity intervals") {
     import spark.implicits._
     val df = Seq(
